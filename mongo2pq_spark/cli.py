@@ -858,107 +858,45 @@ def main(
                 _process_collection(name)
             except Exception as err:
                 failures.append((name, err))
+    # post-run store maintenance: fold every completed batch into one
+    # batch=c0 per tree, for EVERY store directory under each flagged
+    # root (parameters read from its own pin), not only the
+    # collections this run touched: a scheduler's every-N-runs pass
+    # must not skip a store whose collection failed or was absent this
+    # run, or its partition count grows unbounded — the cost the flags
+    # exist to bound. Runs after all of this invocation's increments
+    # committed (never with one in flight); a fold is
+    # content-preserving, so a failure leaves the store usable, but it
+    # is still reported so schedulers retry the maintenance.
+    maintained: list[tuple[type, object]] = []
     if near_dedup_consolidate and near_dedup_store:
-        # post-run store maintenance: merge every completed batch
-        # partition into one batch=c0 per tree — for EVERY collection
-        # tree in the store (each subdir with a meta.json, text_col
-        # read from its pin), not only the collections this run
-        # indexed: a scheduler's every-N-runs maintenance pass must
-        # not silently skip a store whose collection happened to fail
-        # or lack its dedup column THIS run, or its partition count
-        # grows unbounded — the exact cost the flag exists to bound.
-        # Runs AFTER all increments of this invocation committed (the
-        # consolidate contract: never with an increment in flight) and
-        # is content-preserving, so a failure here leaves the store
-        # fully usable — but it is still reported as a run failure so
-        # schedulers retry the maintenance.
-        import json as jsonlib
-
         from mongo2pq_spark.plans.neardedup_store import NearDedupStore
 
-        store_root = Path(near_dedup_store)
-        trees = sorted(
-            p for p in store_root.iterdir()
-            if (p / "meta.json").is_file()
-        ) if store_root.is_dir() else []
-        for tree in trees:
-            try:
-                with open(tree / "meta.json") as fh:
-                    pinned = jsonlib.load(fh)
-                NearDedupStore(
-                    near_dedup_store, tree.name,
-                    text_col=pinned["text_col"],
-                    threshold=near_dedup_threshold,
-                    k=pinned["k"], bands=pinned["bands"],
-                    shingle_n=pinned["shingle_n"], seed=pinned["seed"],
-                ).consolidate(spark)
-            except Exception as err:
-                failures.append((tree.name, err))
+        maintained.append((NearDedupStore, near_dedup_store))
     if index_consolidate and inverted_index:
-        # same maintenance contract as the dedup stores: fold every
-        # collection tree's batches into one batch=c0 through the
-        # crash-safe swap, after all of this run's increments landed;
-        # content-preserving, failures reported so schedulers retry
-        from mongo2pq_spark.operators.text import (
-            consolidate_inverted_index,
+        from mongo2pq_spark.operators.text import InvertedIndexStore
+
+        maintained.append((InvertedIndexStore, inverted_index))
+    if media_store_consolidate:
+        from mongo2pq_spark.plans.mediadedup_store import (
+            MediaFingerprintStore,
         )
 
-        index_root = Path(inverted_index)
-        trees = sorted(
-            p for p in index_root.iterdir() if p.is_dir()
-        ) if index_root.is_dir() else []
-        for tree in trees:
-            try:
-                consolidate_inverted_index(spark, str(tree))
-            except Exception as err:
-                failures.append((tree.name, err))
-    if media_store_consolidate:
-        # same maintenance contract for the MEDIA fingerprint stores:
-        # every tree under each configured store root (parameters read
-        # from its meta.json pin — never guessed), after all of this
-        # run's increments committed; content-preserving, failures
-        # reported so schedulers retry.
-        from mongo2pq_spark.plans.mediadedup_store import open_store
-
-        for root in (media_dhash_store, media_phash_store, media_afp_store):
-            if not root:
-                continue
-            store_root = Path(root)
-            trees = sorted(
-                p for p in store_root.iterdir()
-                if (p / "meta.json").is_file()
-            ) if store_root.is_dir() else []
-            for tree in trees:
-                try:
-                    open_store(store_root, tree.name).consolidate(spark)
-                except Exception as err:
-                    failures.append((tree.name, err))
+        maintained += [
+            (MediaFingerprintStore, root)
+            for root in (media_dhash_store, media_phash_store, media_afp_store)
+            if root
+        ]
     if substring_consolidate and substring_store:
-        # same maintenance contract as the sibling stores: fold every
-        # collection tree's span batches into one batch=c0 through the
-        # crash-safe swap (parameters read from each tree's meta.json
-        # pin), after all of this run's increments landed;
-        # content-preserving, failures reported so schedulers retry
-        import json as jsonlib
-
         from mongo2pq_spark.plans.spanstore import SpanHashStore
 
-        store_root = Path(substring_store)
-        trees = sorted(
-            p for p in store_root.iterdir()
-            if (p / "meta.json").is_file()
-        ) if store_root.is_dir() else []
-        for tree in trees:
+        maintained.append((SpanHashStore, substring_store))
+    for store_cls, root in maintained:
+        for tree in store_cls.collections(root):
             try:
-                with open(tree / "meta.json") as fh:
-                    pinned = jsonlib.load(fh)
-                SpanHashStore(
-                    substring_store, tree.name,
-                    text_col=pinned["text_col"],
-                    span_words=pinned["span_words"],
-                ).consolidate(spark)
+                store_cls.open_from_pin(root, tree).consolidate(spark)
             except Exception as err:
-                failures.append((tree.name, err))
+                failures.append((tree, err))
     if compact_partitions and partition_key:
         # lake maintenance under the same post-run contract: rewrite
         # every hive partition of every collection written under

@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from mongo2pq_spark.functions.hashing import token_hash32
 from mongo2pq_spark.functions.textfns import tokens
 from mongo2pq_spark.operators.cache import cache_stream
+from mongo2pq_spark.plans.bandstore_core import CONSOLIDATED, BatchStore
 
 #: Laplace smoothing weight; baked into the oracle SQL as well.
 DEFAULT_ALPHA = 1.0
@@ -478,12 +479,6 @@ def nb_crossval(
 #: stores fail loud instead of silently mis-merging
 NB_STORE_LAYOUT = 1
 
-_NB_META_NAME = "_NB_STORE_META.json"
-
-#: the consolidated partition compact_nb_store folds history into —
-#: reserved (ingest refuses it as a producer batch id)
-_NB_COMPACT_BATCH = "c0"
-
 
 def _nb_batch_id_ok(batch_id: str) -> bool:
     import re
@@ -491,43 +486,36 @@ def _nb_batch_id_ok(batch_id: str) -> bool:
     return bool(re.fullmatch(r"[A-Za-z0-9_\-]+", batch_id))
 
 
-def _nb_meta_path(store_dir: str) -> str:
-    import os
+class NBCountStore(BatchStore):
+    """The persisted count store on the shared batch-store protocol
+    (``plans/bandstore_core.py``). The pin fixes the label column and
+    term space: counts from another would merge SILENTLY (the numbers
+    still look plausible). Summed counts cannot keep per-row
+    provenance, so absorption is recorded in the sidecar."""
 
-    return os.path.join(store_dir, _NB_META_NAME)
+    NAME = "nb count store"
+    PIN = "_NB_STORE_META.json"
+    TREES = ("term_counts", "doc_counts")
+    ROW_PROVENANCE = False
 
+    def __init__(
+        self, store_dir: str, label_col: str, hash_buckets: int | None
+    ) -> None:
+        super().__init__(
+            store_dir,
+            "",
+            {
+                "layout": NB_STORE_LAYOUT,
+                "label_col": label_col,
+                "hash_buckets": hash_buckets,
+            },
+        )
 
-def _nb_check_meta(
-    store_dir: str, label_col: str, hash_buckets: int | None
-) -> None:
-    """Create-or-validate the store's config pin: a store ingested
-    under one (label column, term space) must refuse batches from
-    another — hash-bucket or label drift would merge incompatible
-    counts SILENTLY (the numbers still look plausible), so this is a
-    fail-loud contract, mirroring the span store's layout pin."""
-    import json
-    import os
-
-    meta = {
-        "layout": NB_STORE_LAYOUT,
-        "label_col": label_col,
-        "hash_buckets": hash_buckets,
-    }
-    path = _nb_meta_path(store_dir)
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as fh:
-            found = json.load(fh)
-        if found != meta:
-            raise ValueError(
-                f"nb count store config mismatch at {store_dir}: "
-                f"store has {found}, ingest wants {meta}"
-            )
-        return
-    os.makedirs(store_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)
+    def regroup(self, name: str, df: DataFrame) -> DataFrame:
+        """Exact sum-regroup: NB statistics are additive integers."""
+        if name == "term_counts":
+            return df.groupBy("label", "term").agg(F.sum("c").alias("c"))
+        return df.groupBy("label").agg(F.sum("n_docs").alias("n_docs"))
 
 
 def nb_count_tables(
@@ -566,22 +554,12 @@ def ingest_nb_counts(
     """Fold one labeled batch into the persisted count store,
     tokenizing ONLY this batch — historical corpus text is never
     re-read (the classifier sibling of the span/band stores'
-    O(increment) ingest). Each batch writes its own
-    ``batch=<id>`` directory with mode=overwrite, so a retried or
-    re-run ingest of the same batch REPLACES itself instead of
-    double-counting — idempotence by directory key, the same
-    contract as the streaming tar ingest's batch-keyed overwrite.
-
-    After a ``compact_nb_store`` pass, a RETRIED producer run whose
-    batch was already folded into ``batch=c0`` must NOT re-append it
-    next to the consolidated partition (compaction is a pure regroup,
-    so the duplicate counts would be baked in permanently) — absorbed
-    batch ids are recorded in the swap-atomic ``_absorbed.json``
-    sidecar and re-ingesting one is a no-op. The no-op is NOT silent:
-    the return value says which branch ran — ``"absorbed"`` for the
-    post-compaction skip, ``"ingested"`` otherwise — so callers (the
-    CLI) can surface the skip instead of reporting a fold that never
-    happened (the r15 ADVICE finding).
+    O(increment) ingest). A retry of the same batch id replaces its
+    own partitions; a retry of an id that ``compact_nb_store`` already
+    folded into ``batch=c0`` writes nothing. The return value says
+    which branch ran — ``"absorbed"`` for that skip, ``"ingested"``
+    otherwise — so callers (the CLI) can surface the skip instead of
+    reporting a fold that never happened.
 
     ``replace_globs`` gives CONTENT-keyed callers name-level replace
     semantics: each entry is a ``batch=...`` dir-name glob (relative
@@ -593,50 +571,29 @@ def ingest_nb_counts(
     the new one. Absorbed generations are gone as directories (their
     counts live inside ``c0``) so the globs cannot un-absorb history;
     that boundary is the caller's to surface."""
-    import shutil
-    from pathlib import Path
 
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        recover_replace,
-    )
+    import shutil
 
     if not _nb_batch_id_ok(batch_id):
         raise ValueError(f"bad nb store batch id: {batch_id!r}")
-    if batch_id == _NB_COMPACT_BATCH:
+    if batch_id == CONSOLIDATED:
         raise ValueError(
             f"nb store batch id {batch_id!r} is reserved for "
             "compact_nb_store's consolidated partition"
         )
-    _nb_check_meta(store_dir, label_col, hash_buckets)
-    trees = [
-        Path(store_dir) / "term_counts",
-        Path(store_dir) / "doc_counts",
-    ]
-    for tree in trees:
-        # roll forward/back any interrupted compaction BEFORE writing
-        # next to it (the inverted-index store's rule)
-        recover_replace(tree)
-    if any(batch_id in absorbed_tokens(t) for t in trees):
-        # the union guards the crash window between the two tree
-        # swaps: if EITHER tree absorbed this batch, re-writing it
-        # into either would double-count after the next compaction
+    store = NBCountStore(store_dir, label_col, hash_buckets)
+    if store.absorbed(batch_id):
         return "absorbed"
     counts, doc_counts = nb_count_tables(
         docs, label_col, text_col=text_col, hash_buckets=hash_buckets
     )
-    for tree in trees:
-        if not tree.is_dir():
-            continue
+    for name in store.TREES:
         for pat in replace_globs:
-            for old in tree.glob(pat):
+            for old in store.tree(name).glob(pat):
                 if old.is_dir() and old.name != f"batch={batch_id}":
                     shutil.rmtree(old)
-    counts.write.mode("overwrite").parquet(
-        f"{store_dir}/term_counts/batch={batch_id}"
-    )
-    doc_counts.write.mode("overwrite").parquet(
-        f"{store_dir}/doc_counts/batch={batch_id}"
+    store.write_batch(
+        batch_id, {"term_counts": counts, "doc_counts": doc_counts}
     )
     return "ingested"
 
@@ -654,15 +611,7 @@ def load_nb_model(
     ingested batches BY CONSTRUCTION (NB statistics are additive; the
     oracle-backed classifier_nb_incremental query proves it
     value-exact). Config is validated against the store's meta pin."""
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import recover_replace
-
-    _nb_check_meta(store_dir, label_col, hash_buckets)
-    # an interrupted compaction may have the tree renamed aside —
-    # roll it forward/back so the read never sees a missing root
-    recover_replace(Path(store_dir) / "term_counts")
-    recover_replace(Path(store_dir) / "doc_counts")
+    store = NBCountStore(store_dir, label_col, hash_buckets)
     # deliberately NOT routed through cache_stream: store directories
     # MUTATE between loads (a re-taught batch overwrites its own part
     # files), and the plan-keyed cache would serve the previous
@@ -670,15 +619,9 @@ def load_nb_model(
     # the CLI retry test). The count tables are tiny; the dense-model
     # fanout re-reading them a handful of times is cheaper than any
     # invalidation protocol.
-    counts = (
-        spark.read.parquet(f"{store_dir}/term_counts")
-        .groupBy("label", "term")
-        .agg(F.sum("c").alias("c"))
-    )
-    doc_counts = (
-        spark.read.parquet(f"{store_dir}/doc_counts")
-        .groupBy("label")
-        .agg(F.sum("n_docs").alias("n_docs"))
+    counts, doc_counts = (
+        store.regroup(name, spark.read.parquet(str(store.tree(name))))
+        for name in store.TREES
     )
     return _model_from_counts(counts, doc_counts, alpha)
 
@@ -686,53 +629,17 @@ def load_nb_model(
 def compact_nb_store(spark, store_dir: str) -> None:
     """Fold every ``batch=`` partition of the count store into a
     single ``batch=c0`` — bounding years of arrival waves back to one
-    count row per (label, term) / per label (VERDICT r14 stretch #9:
-    the store otherwise accretes one directory per wave forever).
-
-    NB sufficient statistics are ADDITIVE integers, so compaction is
-    an exact sum-regroup: the rebuilt model is value-identical to the
-    uncompacted store's by construction (pinned by the equality test
-    in tests/test_operators.py). Each tree swaps through the audited
-    crash-safe ``replace_dir`` protocol shared with the dedup/index
-    stores — at every crash point a load sees either the complete old
-    or the complete new layout, and a crash BETWEEN the two tree swaps
-    is harmless because each tree's sums are independently preserved.
-    Folded batch ids are recorded in the swap-atomic ``_absorbed.json``
-    so a retried producer cannot re-append an absorbed wave (see
-    ``ingest_nb_counts``). Ingest after compaction keeps its
-    O(increment) shape: new batches land NEXT to ``c0``."""
-    import os
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        record_absorbed,
-        recover_replace,
-        replace_dir,
-    )
-
-    for tree, keys, agg in (
-        ("term_counts", ["label", "term"], F.sum("c").alias("c")),
-        ("doc_counts", ["label"], F.sum("n_docs").alias("n_docs")),
-    ):
-        root = Path(store_dir) / tree
-        recover_replace(root)
-        if not root.is_dir():
-            continue
-        folded = spark.read.parquet(str(root)).groupBy(*keys).agg(agg)
-        absorbed = absorbed_tokens(root) | {
-            p.name.split("=", 1)[1]
-            for p in root.glob("batch=*")
-            if p.is_dir() and p.name != f"batch={_NB_COMPACT_BATCH}"
-        }
-
-        def writer(build_path: str) -> None:
-            folded.write.mode("overwrite").parquet(
-                os.path.join(build_path, f"batch={_NB_COMPACT_BATCH}")
-            )
-            record_absorbed(build_path, absorbed)
-
-        replace_dir(root, writer)
+    count row per (label, term) / per label. The fold is an exact
+    sum-regroup, so the rebuilt model is value-identical to the
+    uncompacted store's (pinned by the equality test in
+    tests/test_operators.py); folded batch ids go to the sidecar, so
+    a retried producer cannot re-append an absorbed wave (see
+    ``ingest_nb_counts``). A never-ingested store is left alone."""
+    meta = nb_store_meta(store_dir)
+    if meta is not None:
+        NBCountStore(
+            store_dir, meta["label_col"], meta["hash_buckets"]
+        ).consolidate(spark)
 
 
 def nb_store_meta(store_dir: str) -> dict | None:
@@ -740,11 +647,4 @@ def nb_store_meta(store_dir: str) -> dict | None:
     ingested into — callers (the CLI's score-only path) use it to
     adopt the store's own label column and term space instead of
     guessing."""
-    import json
-    import os
-
-    path = _nb_meta_path(store_dir)
-    if not os.path.exists(path):
-        return None
-    with open(path, encoding="utf-8") as fh:
-        return json.load(fh)
+    return NBCountStore.read_pin(store_dir)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from mongo2pq_spark.functions.hashing import hash64, token_hash32
 from mongo2pq_spark.functions.textfns import STOPWORDS, stopword_hits, tokens
+from mongo2pq_spark.plans.bandstore_core import BatchStore
 
 #: BPE-ish word/number/punctuation regex (word pieces, digit runs,
 #: single punctuation marks) — a cheap token-count proxy.
@@ -567,10 +568,10 @@ def write_inverted_index(
     ``batch=<batch_token>`` partition under ``out_dir`` — indexing a
     daily increment costs O(increment) and never re-reads earlier
     batches (the near-dedup stores' economics applied to retrieval);
-    a rerun with the same token overwrites its own partition, so
-    retries are idempotent. ``query_postings`` probes across all
-    batches; ``consolidate_inverted_index`` folds them back into one
-    via the audited crash-safe swap.
+    the batch lifecycle (overwrite partitions, recovery, the
+    ``batch=c0`` fold, absorbed-retry exclusion) is
+    ``InvertedIndexStore``'s. ``query_postings`` probes across all
+    batches; ``consolidate_inverted_index`` folds them back into one.
 
     ``positions=True`` makes the index POSITIONAL: each posting also
     carries the sorted 0-based token positions of the term in the doc
@@ -581,26 +582,11 @@ def write_inverted_index(
     and the decode stays array-local. A store is positional or not
     from its first batch; do not mix within one store.
     """
-    import os
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        recover_replace,
-    )
-
-    # roll forward/back any interrupted consolidation BEFORE touching
-    # the root: Spark would happily create a missing out_dir and write
-    # just this batch into it, after which recovery would discard the
-    # stranded complete store as stale (the other stores' rule)
-    recover_replace(Path(out_dir))
-    if batch_token in absorbed_tokens(out_dir):
-        # post-absorption retry exclusion (the media stores'
-        # src_token rule): this batch's postings already live inside
-        # batch=c0 — re-writing them next to it would permanently
-        # duplicate every posting, and consolidation (a pure regroup)
-        # would bake the duplicates in
-        return
+    # opening recovers an interrupted fold BEFORE anything is written
+    # next to it: Spark would happily create a missing out_dir and
+    # write just this batch into it, after which recovery would
+    # discard the stranded complete store as stale
+    store = InvertedIndexStore(out_dir)
     if positions:
         toks = df.select(
             F.col(id_col).alias("doc_id"),
@@ -616,13 +602,43 @@ def write_inverted_index(
             F.explode(tokens(F.col(text_col))).alias("term"),
         )
         tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    out = _encode_postings(tf, n_shards)
-    (
-        out.repartitionByRange(max(df.sparkSession.sparkContext.defaultParallelism, 4), "term")
-        .sortWithinPartitions("term", "shard")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"batch={batch_token}"))
+    store.write_batch(
+        batch_token, {"": _term_sorted(_encode_postings(tf, n_shards))}
     )
+
+
+def _term_sorted(postings: DataFrame) -> DataFrame:
+    """Range-partition and sort posting rows by term, so each parquet
+    row group covers a tight term range (the layout a term probe
+    prunes on)."""
+    parallelism = postings.sparkSession.sparkContext.defaultParallelism
+    return postings.repartitionByRange(
+        max(parallelism, 4), "term"
+    ).sortWithinPartitions("term", "shard")
+
+
+class InvertedIndexStore(BatchStore):
+    """An inverted-index directory on the shared batch-store protocol
+    (``plans/bandstore_core.py``): pin-less, one tree (the directory
+    itself). The fold merges several batches' postings into one row,
+    so per-row provenance cannot survive it and absorption is
+    recorded in the ``_absorbed.json`` sidecar."""
+
+    NAME = "inverted index"
+    PIN = None
+    TREES = ("",)
+    ROW_PROVENANCE = False
+
+    def __init__(self, root: str, collection: str = "") -> None:
+        super().__init__(root, collection, None)
+
+    def regroup(self, name: str, df: DataFrame) -> DataFrame:
+        """Batches hold disjoint doc sets, so the fold is a pure
+        regroup: decode every batch's gap runs, re-sort the union per
+        (term, shard), re-encode."""
+        return _term_sorted(
+            _encode_postings(_decode_postings(df, keep_shard=True))
+        )
 
 
 def _encode_postings(tf: DataFrame, n_shards: int | None = None) -> DataFrame:
@@ -720,14 +736,7 @@ def query_postings(
     (term, doc_id, tf) rows. The probe spans every ``batch=`` partition
     (corpus + increments); the increment contract is that batches hold
     DISJOINT doc sets, so the union IS the merged index."""
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import recover_replace
-
-    # a probe must never read a half-swapped store: roll any
-    # interrupted consolidation forward/back first (the other stores'
-    # open-time rule)
-    recover_replace(Path(index_dir))
+    InvertedIndexStore(index_dir)  # never probe a half-swapped store
     idx = spark.read.parquet(index_dir)
     if terms is not None:
         idx = idx.filter(F.col("term").isin(terms))
@@ -763,51 +772,8 @@ def consolidate_inverted_index(spark, index_dir: str) -> None:
     """Fold every ``batch=`` partition of an inverted-index artifact
     into a single ``batch=c0`` — bounding a year of daily increments
     back to one posting row per (term, shard), with probe answers
-    unchanged (batches hold disjoint doc sets, so consolidation is a
-    pure regroup: decode every batch's gap runs, re-sort the union per
-    (term, shard), re-encode). The swap rides the audited crash-safe
-    ``replace_dir`` protocol shared with the near-dedup stores — at
-    every crash point the store reads as either the complete old or
-    the complete new layout. The absorbed-token record rides the
-    shared sidecar helpers (``bandstore_core.absorbed_tokens`` /
-    ``record_absorbed`` — see that module's docstring for why the
-    dedup stores' row-level ``src_token`` mechanism cannot fit a
-    postings regroup)."""
-    import os
-    from pathlib import Path
-
-    from mongo2pq_spark.plans.bandstore_core import (
-        absorbed_tokens,
-        record_absorbed,
-        recover_replace,
-        replace_dir,
-    )
-
-    root = Path(index_dir)
-    recover_replace(root)
-    idx = spark.read.parquet(str(root))
-    out = _encode_postings(_decode_postings(idx, keep_shard=True))
-    # every batch folded here (prior absorptions included) is recorded
-    # so a RETRIED producer run whose batch was absorbed cannot
-    # re-append it next to c0 (write_inverted_index's exclusion above)
-    absorbed = absorbed_tokens(root) | {
-        p.name.split("=", 1)[1]
-        for p in root.glob("batch=*")
-        if p.is_dir() and p.name != "batch=c0"
-    }
-
-    def writer(build_path: str) -> None:
-        (
-            out.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism, 4), "term"
-            )
-            .sortWithinPartitions("term", "shard")
-            .write.mode("overwrite")
-            .parquet(os.path.join(build_path, "batch=c0"))
-        )
-        record_absorbed(build_path, absorbed)
-
-    replace_dir(root, writer)
+    unchanged (``InvertedIndexStore.regroup``)."""
+    InvertedIndexStore(index_dir).consolidate(spark)
 
 
 def phrase_matches(

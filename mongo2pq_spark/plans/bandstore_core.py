@@ -1,44 +1,76 @@
-"""Shared crash-safety core for the persisted MinHash band stores.
+"""The persisted-store protocol: one audited implementation behind
+every batch-keyed store and the streaming band store.
 
-Backs both ``plans/neardedup_store.py`` (batch EL store: signature-
-verified DROP semantics, content-token batches) and
-``streaming/neardedup.py`` (micro-batch store: band-collision FLAG
-semantics, numbered increments). The two stores keep their own
-semantics and layouts; what they share — and what lives here as the
-ONE audited implementation — is the machinery every idempotent run
-and every layout-rewriting maintenance job needs:
+Stores built on ``BatchStore``:
 
-- ``replace_dir`` / ``recover_replace``: crash-safely replace a
-  directory with rewritten content (write-aside build →
-  complete-by-naming rename → swap with ``.old`` rollback). Used by
-  the batch store's ``consolidate()`` (per-tree ``batch=c0``) and the
-  streaming store's ``compact_band_store`` (whole ``bands/`` dir).
-- ``RunLog``: a ``runs/`` directory of atomic JSON manifests plus
-  ``.done`` completion markers, with NUMERIC run-id ordering
-  (lexicographic ordering silently breaks at the 10 000th increment:
-  ``'r10000' < 'r9999'`` as strings, so the crashed-run resume check
-  would inspect the wrong manifest).
-- ``data_partition_dirs``: partition listing that ignores partitions
-  holding no data files (a crashed append's ``_temporary`` droppings
-  or an empty partition holding only ``_SUCCESS`` must not poison a
-  read or an audit).
-- ``absorbed_tokens`` / ``record_absorbed``: the SIDECAR variant of
-  post-consolidation retry exclusion, used by the inverted-index
-  store (operators/text.py). The dedup stores record each row's
-  origin batch IN the row (``src_token``) so exclusion survives
-  consolidation for free — but that mechanism cannot fit a postings
-  layout, where consolidation is a REGROUP that merges several
-  batches' postings into one row: per-row provenance is destroyed
-  by design. The ``_absorbed.json`` sidecar (written into the build
-  dir, so it swaps atomically with the data it describes) is the
-  correct mechanism there, and it lives here so the crash-safety
-  reasoning is owned once. (r11 verdict task 8: evaluated porting
-  the index store onto ``src_token`` rows — doesn't fit, for the
-  reason above; the sidecar helpers moved here instead.)
+- ``plans/neardedup_store.py::NearDedupStore`` (MinHash sigs + bands);
+- ``plans/mediadedup_store.py::MediaFingerprintStore`` (banded media
+  fingerprints);
+- ``plans/spanstore.py::SpanHashStore`` (ExactSubstr span hashes);
+- ``operators/classifier.py::NBCountStore`` (naive-Bayes counts);
+- ``operators/text.py::InvertedIndexStore`` (delta-encoded postings).
 
-Everything here is driver-local filesystem bookkeeping — at warehouse
-scale these become catalog transactions / MERGE boundaries with the
-same shape (documented in the two store modules).
+``streaming/neardedup.py`` keeps its numbered-increment layout and
+uses ``RunLog`` and ``replace_dir`` from here directly.
+
+Layout of one store directory::
+
+    <pin>                  parameters fixed at creation (``meta.json``
+                           unless the store names another file; the
+                           inverted index has none)
+    runs/<token>.done      completion markers (row-provenance stores)
+    <tree>/batch=<token>/  one partition per batch and tree, written
+                           with overwrite
+    <tree>/batch=c0/       the consolidated partition
+    <tree>/_absorbed.json  tokens folded into c0 (sidecar stores)
+
+Lifecycle, all owned by ``BatchStore``:
+
+- open: refuse a remote URI; create the pin, or fail loud when the
+  requested parameters drift from it (probing across parameters
+  gives silently wrong answers); refuse a populated directory without
+  a pin; roll every tree's interrupted fold forward or back; warn
+  about batches that were written but never marked done.
+- commit: a batch is identified by a deterministic content token
+  (``digest_batch_token``), so a retry maps to the same token,
+  overwrites its own ``batch=<token>`` partitions and excludes them
+  from its own probe. Row-provenance stores then land
+  ``runs/<token>.done``.
+- consolidate: fold the store's batches into ``batch=c0`` per tree
+  through the store's ``regroup`` and ``replace_dir``. Run it between
+  increments, never with one in flight.
+
+Crash windows. A commit crash leaves some of the batch's partitions
+written; the retry overwrites them. Without a done marker a
+row-provenance batch is never folded, and the open-time audit names
+it. A fold crash is resolved by ``recover_replace`` (inventory in its
+docstring): every tree reads as its complete old or complete new
+content, and the sources a fold reads are only deleted after its swap
+returned, so content is never lost. The trees of one store swap
+independently; each fold preserves its tree's content on its own.
+
+Absorption. A producer retry of a batch already folded into c0 must
+not double its rows. Two mechanisms exist because two kinds of
+regroup exist:
+
+- row provenance (``ROW_PROVENANCE = True``, the dedup stores): every
+  row carries its origin batch in ``src_token``, and the regroup keeps
+  it, so the probe's own-batch exclusion still works after the fold.
+  A retry re-commits its partition next to c0; the probe tolerates
+  the duplicate rows and the next fold merges them. The fold replaces
+  ``<tree>/batch=c0`` and then deletes the done batches it read; a
+  batch without a done marker stays out of the fold.
+- sidecar (``ROW_PROVENANCE = False``): the regroup merges rows of
+  several batches into one (postings lists, summed counts, span
+  hashes flagged ``multi``), so per-row provenance is gone by design.
+  The fold writes ``batch=c0`` and ``_absorbed.json`` into one build
+  of the WHOLE tree and swaps it in, so the record can never land
+  without the data it describes; ``write_batch`` of an absorbed token
+  writes nothing.
+
+Everything here is driver-local filesystem bookkeeping. At warehouse
+scale the same shape becomes catalog tables with MERGE commits and an
+OPTIMIZE job.
 """
 
 from __future__ import annotations
@@ -46,6 +78,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import sys
 from pathlib import Path
 from typing import Callable
 
@@ -139,8 +172,8 @@ def recover_replace(target: Path) -> None:
     - build written, not yet renamed → the stranded ``.build`` is
       dropped (incomplete by definition).
     - build renamed to ``.swapin`` but ``target`` still present → the
-      swap-in is DISCARDED: its content is recomputable (both call
-      sites re-derive it from sources that are only deleted after
+      swap-in is DISCARDED: its content is recomputable (every
+      caller re-derives it from sources that are only deleted after
       ``replace_dir`` returns), while preferring it would require
       proving it newer than ``target``.
     - ``target`` renamed aside to ``.old``, swap-in not yet renamed →
@@ -189,7 +222,7 @@ class RunLog:
 
     Two usage profiles, one bookkeeping implementation:
 
-    - marker-only (batch store): ``mark_done(token)`` +
+    - marker-only (``BatchStore``): ``mark_done(token)`` +
       ``done_tokens()`` — tokens are caller-defined (content
       fingerprints).
     - numbered increments (streaming store): ``begin_numbered()``
@@ -268,3 +301,247 @@ class RunLog:
             },
         )
         return run_id, offset, n_batches
+
+
+#: token of the consolidated partition every fold writes
+CONSOLIDATED = "c0"
+
+
+def write_parquet(df, path: Path | str) -> None:
+    """The one writer of store data: batch partitions and fold
+    builds alike (overwrite, so a retry replaces its own output)."""
+    df.write.mode("overwrite").parquet(str(path))
+
+
+class BatchStore:
+    """The lifecycle of one batch-keyed store directory (see the module
+    docstring). A store supplies its pin, its tree names and
+    ``regroup``; everything else is here.
+
+    Class attributes:
+
+    - ``NAME``: how errors and warnings name the store;
+    - ``PIN``: pin file name, or None for a pin-less store;
+    - ``PIN_ARGS``: constructor arguments ``from_pin`` reads back
+      from the pin;
+    - ``TREES``: tree names under the store directory (``""`` is the
+      directory itself);
+    - ``ROW_PROVENANCE``: the absorption mechanism.
+    """
+
+    NAME = "batch store"
+    PIN: str | None = "meta.json"
+    PIN_ARGS: tuple[str, ...] = ()
+    TREES: tuple[str, ...] = ()
+    ROW_PROVENANCE = True
+
+    def __init__(
+        self,
+        root: str | os.PathLike,
+        collection: str,
+        pinned: dict | None,
+    ) -> None:
+        if "://" in str(root):
+            raise ValueError(
+                f"{self.NAME} root must be a driver-visible local "
+                f"directory, got {str(root)!r}; remote object-store "
+                "backends need the catalog-table variant of this layout"
+            )
+        self.dir = Path(root) / collection
+        if self.PIN is not None:
+            self._check_pin(pinned)
+        self.recover()
+        if self.ROW_PROVENANCE:
+            self._audit_done_markers()
+
+    # ------------------------------------------------------------ pin
+
+    def _check_pin(self, pinned: dict) -> None:
+        stored = self.read_pin(self.dir)
+        if stored is not None:
+            drift = {
+                key: (stored.get(key), val)
+                for key, val in pinned.items()
+                if stored.get(key) != val
+            }
+            if drift:
+                raise ValueError(
+                    f"config mismatch: {self.NAME} {self.dir} was built "
+                    f"with different parameters: {drift} (stored, "
+                    "requested) — probing across parameter changes "
+                    "gives garbage answers; use a fresh store directory"
+                )
+            return
+        # names Spark's readers ignore (the pin's own temp file, a
+        # streaming checkpoint pin) are not data; anything else is a
+        # foreign layout whose history initializing would discard
+        if self.dir.is_dir() and any(
+            not e.name.startswith(("_", ".")) for e in self.dir.iterdir()
+        ):
+            raise ValueError(
+                f"{self.dir} exists and is non-empty but has no "
+                f"{self.PIN} — not a {self.NAME} (or an incompatible "
+                "layout); refusing to initialize over it"
+            )
+        self.dir.mkdir(parents=True, exist_ok=True)
+        atomic_write_json(self.dir / self.PIN, pinned)
+
+    @classmethod
+    def read_pin(cls, store_dir: str | os.PathLike) -> dict | None:
+        path = Path(store_dir) / cls.PIN
+        if not path.is_file():
+            return None
+        with open(path) as fh:
+            return json.load(fh)
+
+    @classmethod
+    def collections(cls, root: str | os.PathLike) -> list[str]:
+        """Store directories under ``root``: those holding the pin, or
+        every subdirectory for a pin-less store."""
+        base = Path(root)
+        if not base.is_dir():
+            return []
+        return sorted(
+            p.name
+            for p in base.iterdir()
+            if p.is_dir() and (cls.PIN is None or (p / cls.PIN).is_file())
+        )
+
+    @classmethod
+    def open_from_pin(
+        cls, root: str | os.PathLike, collection: str
+    ) -> "BatchStore":
+        """Open an existing store with the parameters of its own pin,
+        so maintenance never guesses them and trips the drift check."""
+        pinned = cls.read_pin(Path(root) / collection) if cls.PIN else {}
+        if pinned is None:
+            raise ValueError(f"{Path(root) / collection} has no {cls.PIN}")
+        return cls.from_pin(root, collection, pinned)
+
+    @classmethod
+    def from_pin(
+        cls, root: str | os.PathLike, collection: str, pinned: dict
+    ) -> "BatchStore":
+        return cls(root, collection, **{a: pinned[a] for a in cls.PIN_ARGS})
+
+    # ---------------------------------------------------------- trees
+
+    def tree(self, name: str) -> Path:
+        return self.dir / name
+
+    def _fold_target(self, name: str) -> Path:
+        """What a fold swaps: the c0 partition, or the whole tree when
+        the sidecar record has to swap together with the data."""
+        tree = self.tree(name)
+        return tree / f"batch={CONSOLIDATED}" if self.ROW_PROVENANCE else tree
+
+    def recover(self) -> None:
+        """Roll every tree's interrupted fold forward or back."""
+        for name in self.TREES:
+            recover_replace(self._fold_target(name))
+
+    def done_tokens(self) -> set[str]:
+        return RunLog(self.dir / "runs").done_tokens()
+
+    def _audit_done_markers(self) -> None:
+        """Warn about batches with data but no completion marker (a
+        crash inside ``commit``): they are left out of folds and only
+        partly indexed until the same input is re-run, which
+        overwrites them and lands the marker. A warning, not an error:
+        the store stays usable and the fix is one rerun."""
+        partial = {
+            p.name.removeprefix("batch=")
+            for name in self.TREES
+            for p in data_partition_dirs(self.tree(name))
+        } - self.done_tokens() - {CONSOLIDATED}
+        if partial:
+            print(
+                f"WARNING: {self.NAME} {self.dir} has partially-"
+                f"committed batches {sorted(partial)} (no completion "
+                "marker) — re-run those inputs to finish their entries; "
+                "until then dedup against them is incomplete",
+                file=sys.stderr,
+            )
+
+    def other_batches(self, name: str, token: str) -> list[str]:
+        """Data-holding partitions of tree ``name`` except the probing
+        batch's own (a retry must not collide with itself)."""
+        return [
+            str(p)
+            for p in data_partition_dirs(
+                self.tree(name), exclude=f"batch={token}"
+            )
+        ]
+
+    def absorbed(self, token: str) -> bool:
+        """Whether a fold already absorbed ``token`` in ANY tree: a
+        crash between two tree swaps must not let a retry re-write
+        the batch into the tree that has not swapped yet."""
+        return any(token in absorbed_tokens(self.tree(n)) for n in self.TREES)
+
+    # ---------------------------------------------------------- write
+
+    def write_batch(self, token: str, frames: dict) -> None:
+        """Overwrite ``<tree>/batch=<token>`` with each tree's frame,
+        then mark the batch done (row-provenance stores). Writes
+        nothing when a fold already absorbed the token (sidecar
+        stores)."""
+        if self.absorbed(token):
+            return
+        for name, df in frames.items():
+            write_parquet(df, self.tree(name) / f"batch={token}")
+        if self.ROW_PROVENANCE:
+            RunLog(self.dir / "runs").mark_done(token)
+
+    # ----------------------------------------------------------- fold
+
+    def regroup(self, name: str, df):
+        """Tree ``name``'s folded content from the union of its
+        sources (read with the ``batch`` partition column)."""
+        raise NotImplementedError
+
+    def consolidate(self, spark) -> None:
+        """Fold each tree's batches into ``batch=c0``. c0 is complete
+        by naming (it only gets that name through a finished swap), so
+        it always joins the fold; a row-provenance batch joins only
+        once marked done. Sources stay on disk until the swap returned,
+        which is what lets ``recover_replace`` discard an ambiguous
+        swap-in."""
+        self.recover()
+        done = self.done_tokens() if self.ROW_PROVENANCE else None
+        c0 = f"batch={CONSOLIDATED}"
+        for name in self.TREES:
+            tree = self.tree(name)
+            src = [
+                p
+                for p in data_partition_dirs(tree)
+                if done is None
+                or p.name == c0
+                or p.name.removeprefix("batch=") in done
+            ]
+            folded_tokens = {
+                p.name.removeprefix("batch=") for p in src if p.name != c0
+            }
+            if not folded_tokens:
+                continue
+            folded = self.regroup(
+                name,
+                spark.read.option("basePath", str(tree)).parquet(
+                    *[str(p) for p in src]
+                ),
+            )
+            if self.ROW_PROVENANCE:
+                replace_dir(
+                    tree / c0, lambda build: write_parquet(folded, build)
+                )
+                for p in src:
+                    if p.name != c0:
+                        shutil.rmtree(p, ignore_errors=True)
+            else:
+                absorbed = absorbed_tokens(tree) | folded_tokens
+
+                def writer(build: str) -> None:
+                    write_parquet(folded, os.path.join(build, c0))
+                    record_absorbed(build, absorbed)
+
+                replace_dir(tree, writer)

@@ -1,8 +1,8 @@
 """Persistent cross-run incremental MEDIA near-dedup stores — the
 ``--near-dedup-store`` contract (plans/neardedup_store.py) applied to
-perceptual fingerprints of binary media payloads. One audited base
-(`MediaFingerprintStore`) carries the whole lifecycle; a modality
-plugs in only (a) which mimes its real codec decodes and (b) the
+perceptual fingerprints of binary media payloads. One base
+(`MediaFingerprintStore`) carries fingerprinting, probe and commit; a
+modality plugs in only (a) which mimes its real codec decodes and (b) the
 payload→60-bit-fingerprint function:
 
 - ``ImageDedupStore`` (CLI ``--media-dhash-store``): dHash through the
@@ -23,12 +23,12 @@ write, and the surviving fingerprints are committed. Per-run cost
 scales with the increment; history's only trace is one int64
 fingerprint (× bands) per surviving file.
 
-Identity & idempotency mirror the text store: a file is identified by
-the md5 of its payload BYTES (rerun-stable, id-column-independent);
-the batch token is a deterministic order-independent aggregate of the
-payload-digest set; store writes are ``batch=<token>`` partition
-overwrites whose probe excludes the batch's own rows (src_token), so
-reruns and crash-retries recompute the identical drop set.
+A file is identified by the md5 of its payload BYTES (rerun-stable,
+id-column-independent) and a batch by the content token of its
+payload-digest set. The batch lifecycle (pin, token partitions, done
+markers, recovery, the ``batch=c0`` fold) is
+``plans/bandstore_core.py::BatchStore``; rows keep their origin
+``src_token``.
 
 Scope honesty: only mimes the real codecs decode are fingerprinted.
 Other-modality rows and payloads the codec rejects (GIF/WebP,
@@ -39,38 +39,22 @@ dedup what we cannot decode would be a fake. Within-batch near-dups
 both survive (exact payload-digest dedup runs upstream in the CLI; the
 text store has the same contract).
 
-Growth & maintenance: one ``batch=`` partition per run (a listing
-cost). ``consolidate()`` bounds it — every COMPLETED batch merges into
-one ``batch=c0`` via the shared crash-safe swap
-(plans/bandstore_core.replace_dir), keying on the full
-(band_id, band_value, fp) triple exactly like the streaming Hamming
-store's compaction: future probes verify by popcount against ``fp``,
-so keeping one row per triple preserves every future drop decision.
-Rows keep their origin ``src_token``, so the probe's own-batch
-exclusion (the idempotency backbone) survives absorption; when two
-batches committed an identical triple (only possible through a
-crash-retry re-commit — filter_new drops cross-batch fingerprint
-collisions before commit), folding to the min token is safe because
-either row answers the probe identically.
+Layout under ``<root>/<collection>/``: ``meta.json`` (layout, kind,
+max_hamming, bits), ``runs/<token>.done``, and
+``fps/batch=<token>/`` (id, fp, band_id, band_value, src_token).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo2pq_spark.plans.bandstore_core import (
-    RunLog,
-    atomic_write_json,
-    data_partition_dirs,
-    recover_replace,
-    replace_dir,
+    BatchStore,
+    digest_batch_token,
 )
 
 #: canonical media id inside the store: md5 of the payload bytes
@@ -79,14 +63,17 @@ STORE_ID = "__m2p_media_id"
 FP_SCHEMA = f"{STORE_ID} string, fp bigint, decode_err string"
 
 
-class MediaFingerprintStore:
-    """Shared lifecycle for perceptual-fingerprint media dedup stores.
+class MediaFingerprintStore(BatchStore):
+    """Fingerprint, probe and commit for perceptual media dedup stores.
 
-    Subclasses pin ``KIND`` (the meta.json layout marker — probing
+    Subclasses pin ``KIND`` (the meta.json modality marker — probing
     across kinds is refused), ``DECODABLE_MIMES``, and
     ``_fingerprint_payload(payload) -> int`` (the ≤63-bit hash; typed
     decode failures must raise ValueError/NotImplementedError)."""
 
+    NAME = "media fingerprint store"
+    PIN_ARGS = ("max_hamming", "bits")
+    TREES = ("fps",)
     KIND: str = ""
     DECODABLE_MIMES: tuple[str, ...] = ()
 
@@ -97,69 +84,38 @@ class MediaFingerprintStore:
         max_hamming: int = 3,
         bits: int = 60,
     ) -> None:
-        root_str = str(root)
-        if "://" in root_str:
-            raise ValueError(
-                "media fingerprint store must be a driver-visible "
-                f"local directory, got {root_str!r}; remote "
-                "object-store backends need the catalog-table variant "
-                "of this layout (see module docstring)"
-            )
         if not 0 <= max_hamming < bits:
             raise ValueError(
                 f"max_hamming must be in [0, {bits}), got {max_hamming}"
             )
-        self.dir = Path(root) / collection
         self.max_hamming = max_hamming
         self.bits = bits
         self._hashed = None
         self._fp = None
         self._dropped = None
-        self._check_meta()
-        self._recover_consolidation()
+        super().__init__(
+            root,
+            collection,
+            {
+                "layout": 1,
+                "kind": self.KIND,
+                "max_hamming": max_hamming,
+                "bits": bits,
+            },
+        )
 
-    # -------------------------------------------------------- layout
-
-    def _check_meta(self) -> None:
-        meta_path = self.dir / "meta.json"
-        pinned = {
-            "layout": 1,
-            "kind": self.KIND,
-            "max_hamming": self.max_hamming,
-            "bits": self.bits,
-        }
-        if meta_path.is_file():
-            with open(meta_path) as fh:
-                stored = json.load(fh)
-            drift = {
-                key: (stored.get(key), val)
-                for key, val in pinned.items()
-                if stored.get(key) != val
-            }
-            if drift:
-                raise ValueError(
-                    f"media fingerprint store {self.dir} was built "
-                    f"with different parameters: {drift} (stored, "
-                    "requested) — probing across parameter changes "
-                    "produces garbage candidates; use a fresh store "
-                    "directory"
-                )
-            return
-        if self.dir.is_dir() and any(
-            e for e in self.dir.iterdir() if not e.name.endswith(".tmp")
-        ):
+    @classmethod
+    def from_pin(cls, root, collection, pinned) -> "MediaFingerprintStore":
+        """The pinned kind picks the modality class."""
+        store_cls = KIND_TO_STORE.get(pinned.get("kind"))
+        if store_cls is None:
             raise ValueError(
-                f"{self.dir} exists and is non-empty but has no "
-                "meta.json — not a media fingerprint store (or an "
-                "incompatible layout); refusing to initialize over it"
+                f"{os.path.join(root, collection)} pins unknown store "
+                f"kind {pinned.get('kind')!r}"
             )
-        self.dir.mkdir(parents=True, exist_ok=True)
-        atomic_write_json(meta_path, pinned)
-
-    def _recover_consolidation(self) -> None:
-        """Roll forward/back any consolidation swap interrupted
-        mid-flight (the shared replace_dir crash windows)."""
-        recover_replace(self.dir / "fps" / "batch=c0")
+        return store_cls(
+            root, collection, **{a: pinned[a] for a in cls.PIN_ARGS}
+        )
 
     # -------------------------------------------------------- modality
 
@@ -172,8 +128,6 @@ class MediaFingerprintStore:
         """Deterministic, order-independent fingerprint of the batch's
         payload-digest set (same construction and collision margin as
         the text store's token: count + both 64-bit md5-half sums)."""
-        from mongo2pq_spark.plans.bandstore_core import digest_batch_token
-
         return digest_batch_token(df, F.col("payload_md5"))
 
     def _fp_or_null(self, df: DataFrame) -> DataFrame:
@@ -240,12 +194,7 @@ class MediaFingerprintStore:
         self._fp = fp
 
         spark = df.sparkSession
-        fp_dirs = [
-            str(p)
-            for p in data_partition_dirs(
-                self.dir / "fps", exclude=f"batch={token}"
-            )
-        ]
+        fp_dirs = self.other_batches("fps", token)
         if not fp_dirs:
             self._dropped = None
             return df
@@ -273,9 +222,8 @@ class MediaFingerprintStore:
         )
 
     def commit(self, token: str) -> None:
-        """Index the batch's surviving fingerprints (banded rows,
-        overwrite-by-partition, then the done marker) — only after the
-        EL write succeeded, same ordering contract as the text store."""
+        """Index the batch's surviving fingerprints — only after the EL
+        write succeeded, same ordering contract as the text store."""
         if self._fp is None:
             raise RuntimeError("commit() before filter_new()")
         survivors = (
@@ -283,49 +231,25 @@ class MediaFingerprintStore:
             if self._dropped is None
             else self._fp.join(self._dropped, STORE_ID, "left_anti")
         )
-        self._banded(survivors).withColumn(
-            "src_token", F.lit(token)
-        ).write.mode("overwrite").parquet(
-            str(self.dir / "fps" / f"batch={token}")
+        self.write_batch(
+            token,
+            {
+                "fps": self._banded(survivors).withColumn(
+                    "src_token", F.lit(token)
+                )
+            },
         )
-        RunLog(self.dir / "runs").mark_done(token)
         self.close()
 
-    # -------------------------------------------------- maintenance
-
-    def consolidate(self, spark: SparkSession) -> None:
-        """Merge every COMPLETED batch partition into one ``batch=c0``,
-        bounding the partition-count growth of long ingestion histories
-        (a listing cost, not a data cost).
-
-        Preservation key is the full (band_id, band_value, fp) triple
-        — the probe joins on (band_id, band_value) and verifies by
-        exact popcount against ``fp``, so one surviving row per triple
-        leaves every future drop decision unchanged. The min
-        (src_token, id) struct keeps the survivor deterministic and
-        the origin token intact for own-batch exclusion on retries.
-        ``batch=c0`` is complete BY NAMING (it only ever gets that
-        name via the replace_dir swap of a fully-written build), so it
-        joins the merge unconditionally; batches without a completion
-        marker (mid-commit crashes) are left untouched so their retry
-        semantics are preserved. Sources stay in place until the swap
-        returns — which is what licenses replace_dir's
-        discard-ambiguous-swapin recovery choice. Run it between EL
-        runs — never with an increment in flight."""
-        self._recover_consolidation()
-        base = self.dir / "fps"
-        done = RunLog(self.dir / "runs").done_tokens()
-        src = [
-            p
-            for p in data_partition_dirs(base)
-            if p.name == "batch=c0"
-            or p.name.removeprefix("batch=") in done
-        ]
-        if len(src) < 2:
-            return
-        merged = (
-            spark.read.parquet(*[str(p) for p in src])
-            .groupBy("band_id", "band_value", "fp")
+    def regroup(self, name: str, df: DataFrame) -> DataFrame:
+        """One row per (band_id, band_value, fp) triple — the probe
+        joins on the band and verifies by popcount against ``fp``, so
+        this keeps every future drop decision. The min (src_token, id)
+        keeps the survivor deterministic and its origin token intact;
+        two batches share a triple only through a crash-retry
+        re-commit, where either row answers the probe identically."""
+        return (
+            df.groupBy("band_id", "band_value", "fp")
             .agg(F.min(F.struct("src_token", STORE_ID)).alias("first"))
             .select(
                 F.col(f"first.{STORE_ID}").alias(STORE_ID),
@@ -335,13 +259,6 @@ class MediaFingerprintStore:
                 F.col("first.src_token").alias("src_token"),
             )
         )
-        replace_dir(
-            base / "batch=c0",
-            lambda build: merged.write.mode("overwrite").parquet(build),
-        )
-        for p in src:
-            if p.name != "batch=c0":
-                shutil.rmtree(p, ignore_errors=True)
 
     def close(self) -> None:
         for cached in (self._hashed, self._dropped):
@@ -408,25 +325,3 @@ KIND_TO_STORE: dict[str, type[MediaFingerprintStore]] = {
     cls.KIND: cls
     for cls in (ImageDedupStore, PhashImageDedupStore, AudioDedupStore)
 }
-
-
-def open_store(
-    root: str | os.PathLike, collection: str
-) -> MediaFingerprintStore:
-    """Open an EXISTING store tree with the parameters pinned in its
-    meta.json (maintenance entry point — a consolidation pass must
-    never guess parameters and trip the drift guard)."""
-    meta_path = Path(root) / collection / "meta.json"
-    with open(meta_path) as fh:
-        pinned = json.load(fh)
-    cls = KIND_TO_STORE.get(pinned.get("kind"))
-    if cls is None:
-        raise ValueError(
-            f"{meta_path} pins unknown store kind {pinned.get('kind')!r}"
-        )
-    return cls(
-        root,
-        collection,
-        max_hamming=pinned["max_hamming"],
-        bits=pinned["bits"],
-    )

@@ -15,15 +15,11 @@ Layout (one tree per collection)::
     <root>/<collection>/spans/_absorbed.json   post-consolidation
                                                retry exclusion record
 
-Batch identity is the family's content token
-(``bandstore_core.digest_batch_token`` over the md5 text digest):
-retries of an increment map to the same token, overwrite their own
-partition, and exclude it from their history probe — idempotent
-replay. ``consolidate`` folds every batch into ``batch=c0`` (one row
-per distinct hash, ``src_token`` = min contributing token) through
-the audited ``replace_dir`` swap, recording absorbed tokens via the
-shared sidecar so an absorbed batch's retry still replays instead of
-re-appending.
+The batch lifecycle (pin, token partitions, recovery, the
+``batch=c0`` fold) is ``plans/bandstore_core.py::BatchStore``. The
+fold keeps one row per distinct hash, so absorption is recorded in
+the ``_absorbed.json`` sidecar: a retry of an absorbed batch still
+probes, but writes nothing.
 
 Post-consolidation retry exclusion is EXACT (no min-src_token
 ambiguity): ``batch=c0`` rows carry ``multi`` — true iff the hash
@@ -31,31 +27,27 @@ was contributed by >= 2 distinct batches. A replaying batch excludes
 only hashes whose sole contributor is itself (``src_token == own AND
 NOT multi``); a multi-contributor hash is genuinely historical for
 any single batch and stays in its history view.
-
-At warehouse scale this tree is a catalog table and ``consolidate``
-an OPTIMIZE/MERGE maintenance job, same as the sibling stores.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo2pq_spark.plans.bandstore_core import (
-    absorbed_tokens,
-    data_partition_dirs,
+    BatchStore,
     digest_batch_token,
-    record_absorbed,
-    recover_replace,
-    replace_dir,
 )
 
 
-class SpanHashStore:
+class SpanHashStore(BatchStore):
+    NAME = "span store"
+    PIN_ARGS = ("text_col", "span_words")
+    TREES = ("spans",)
+    ROW_PROVENANCE = False
+
     def __init__(
         self,
         root: str | os.PathLike,
@@ -63,55 +55,23 @@ class SpanHashStore:
         text_col: str = "text",
         span_words: int = 8,
     ) -> None:
-        root_str = str(root)
-        if "://" in root_str:
-            raise ValueError(
-                "--substring-store must be a driver-visible local "
-                f"directory, got {root_str!r}; remote object-store "
-                "backends need the catalog-table variant of this "
-                "layout (see module docstring)"
-            )
-        self.dir = Path(root) / collection
         self.text_col = text_col
         self.span_words = span_words
-        self._check_meta()
-        recover_replace(self.dir / "spans")
-
-    def _check_meta(self) -> None:
-        meta_path = self.dir / "meta.json"
-        # layout 2: span hashes are the 60-bit hash64 (ADVICE r12 —
-        # destructive removal must not key on 32 bits). A layout-1
-        # store persisted 32-bit hashes: probing it with 60-bit spans
-        # would silently never match, so the drift check below makes
-        # it fail loud instead; rebuild the store from corpus text.
-        pinned = {
-            "layout": 2,
-            "span_hash": "md5-60bit",
-            "text_col": self.text_col,
-            "span_words": self.span_words,
-        }
-        if meta_path.is_file():
-            with open(meta_path) as fh:
-                stored = json.load(fh)
-            drift = {
-                k: (stored.get(k), v)
-                for k, v in pinned.items()
-                if stored.get(k) != v
-            }
-            if drift:
-                raise ValueError(
-                    f"span store {self.dir} was created with different "
-                    f"parameters: {drift} — span hashes are only "
-                    "comparable within one parameterization; use a "
-                    "fresh store directory"
-                )
-        else:
-            self.dir.mkdir(parents=True, exist_ok=True)
-            from mongo2pq_spark.plans.bandstore_core import (
-                atomic_write_json,
-            )
-
-            atomic_write_json(meta_path, pinned)
+        # layout 2: span hashes are the 60-bit hash64 (destructive
+        # removal must not key on 32 bits). A layout-1 store persisted
+        # 32-bit hashes that 60-bit spans would silently never match,
+        # so the pin's drift check makes it fail loud instead; rebuild
+        # such a store from corpus text.
+        super().__init__(
+            root,
+            collection,
+            {
+                "layout": 2,
+                "span_hash": "md5-60bit",
+                "text_col": text_col,
+                "span_words": span_words,
+            },
+        )
 
     def _token(self, df: DataFrame) -> str:
         return digest_batch_token(df, F.md5(F.col(self.text_col)))
@@ -122,11 +82,10 @@ class SpanHashStore:
         """History hash set EXCLUDING the probing batch's own spans:
         other batch partitions by directory, plus (post-consolidation
         retry) ``batch=c0`` rows whose ``src_token`` differs."""
-        spans = self.dir / "spans"
-        dirs = data_partition_dirs(spans, exclude=f"batch={own_token}")
+        dirs = self.other_batches("spans", own_token)
         if not dirs:
             return spark.createDataFrame([], "h bigint")
-        idx = spark.read.parquet(*[str(d) for d in dirs])
+        idx = spark.read.parquet(*dirs)
         return idx.filter(
             F.col("multi") | (F.col("src_token") != own_token)
         ).select("h")
@@ -150,8 +109,6 @@ class SpanHashStore:
             span_hash_index,
         )
 
-        spans = self.dir / "spans"
-        recover_replace(spans)
         token = self._token(df)
         index = self._index(spark, token)
         result = duplicated_span_removal_incremental(
@@ -162,9 +119,10 @@ class SpanHashStore:
             span_words=self.span_words,
             with_text=with_text,
         )
-        if token not in absorbed_tokens(spans):
-            (
-                span_hash_index(
+        self.write_batch(
+            token,
+            {
+                "spans": span_hash_index(
                     df,
                     id_col=id_col,
                     text_col=self.text_col,
@@ -172,42 +130,18 @@ class SpanHashStore:
                 )
                 .withColumn("src_token", F.lit(token))
                 .withColumn("multi", F.lit(False))
-                .write.mode("overwrite")
-                .parquet(str(spans / f"batch={token}"))
-            )
+            },
+        )
         return result
 
-    def consolidate(self, spark: SparkSession) -> None:
-        """Fold every batch partition into one ``batch=c0`` (one row
-        per distinct hash) through the audited crash-safe swap —
-        bounding a year of daily increments to the size of the
-        distinct span set, with probe answers unchanged."""
-        spans = self.dir / "spans"
-        recover_replace(spans)
-        dirs = data_partition_dirs(spans)
-        if not dirs:
-            return
-        union = spark.read.parquet(*[str(d) for d in dirs])
-        # multi: >= 2 distinct contributing batches, OR already
-        # marked multi by a previous consolidation (re-folding c0
-        # with new batches must not lose the flag)
-        folded = union.groupBy("h").agg(
+    def regroup(self, name: str, df: DataFrame) -> DataFrame:
+        """One row per distinct hash. ``multi``: >= 2 distinct
+        contributing batches, or already marked by an earlier fold
+        (re-folding c0 with new batches must not lose the flag)."""
+        return df.groupBy("h").agg(
             F.min("src_token").alias("src_token"),
             (
                 (F.count_distinct("src_token") > 1)
                 | (F.max(F.col("multi").cast("int")) == 1)
             ).alias("multi"),
         )
-        absorbed = absorbed_tokens(spans) | {
-            d.name.split("=", 1)[1]
-            for d in dirs
-            if d.name != "batch=c0"
-        }
-
-        def writer(build_path: str) -> None:
-            folded.write.mode("overwrite").parquet(
-                os.path.join(build_path, "batch=c0")
-            )
-            record_absorbed(build_path, absorbed)
-
-        replace_dir(spans, writer)

@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's ``MemTotal``, in MiB (a heap the size of the
+    whole host would let the JVM push the machine into swap or the
+    OOM killer); ``16g`` where ``meminfo`` does not exist."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except FileNotFoundError:
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "mongo2pq_spark",
     master: str | None = None,
@@ -33,7 +47,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():

@@ -248,7 +248,13 @@ class MongoDumpDataSource(DataSource):
 
 
 def register_mongodump_source(spark) -> None:
-    """Idempotently register the mongodump Python data source."""
+    """Idempotently register the mongodump Python data source. Ships
+    the package to executors first: reader instances unpickle INSIDE
+    Python workers, which only find this module by accident
+    (cwd == repo root) without the explicit addPyFile."""
+    from mongo2pq_spark.deploy import ensure_shipped
+
+    ensure_shipped(spark)
     spark.dataSource.register(MongoDumpDataSource)
 
 

@@ -116,29 +116,67 @@ def _begin_increment(
     )
 
 
+def _batch_seq(batch_df: DataFrame, n_batches: int, offset: int) -> int:
+    """Global sequence number of a micro-batch, from the DATA: staging
+    puts exactly one ``doc_id % n_batches`` class in each file."""
+    k = batch_df.select(
+        (F.col("doc_id") % n_batches).alias("k")
+    ).first()["k"]
+    return offset + k
+
+
+def _earlier_bands(spark, store_dir: str, seq: int) -> DataFrame | None:
+    """Band rows of every batch sequenced before ``seq`` (earlier
+    batches of this increment AND every prior increment), or None for
+    an empty store — probed from the store's own partitions, so replay
+    is exact. Explicit existence check, not try/except: a real read
+    error must fail the batch (silently treating it as "empty store"
+    would mass-unflag duplicates). At warehouse scale this becomes a
+    catalog table-exists check / MERGE source."""
+    bands_dir = os.path.join(store_dir, "bands")
+    if not data_partition_dirs(Path(bands_dir), prefix="batch_k="):
+        return None
+    return (
+        spark.read.option("basePath", bands_dir)
+        .parquet(bands_dir)
+        .filter(F.col("batch_k") < seq)
+    )
+
+
+def _flag_and_append(
+    batch_df: DataFrame,
+    store_dir: str,
+    seq: int,
+    dup_ids: DataFrame,
+    bands: DataFrame,
+) -> None:
+    """Write the batch's per-document flags and its band rows, both as
+    ``batch_k=<seq>`` partition overwrites (idempotent under replay,
+    collision-free across increments)."""
+    flags = batch_df.select("doc_id").join(
+        dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left"
+    ).select(
+        "doc_id",
+        F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
+    )
+    for tree, df in (("flags", flags), ("bands", bands)):
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(store_dir, tree, f"batch_k={seq}")
+        )
+
+
 def make_near_dedup_batch(store_dir: str, n_batches: int, offset: int = 0):
     """``foreachBatch`` body: flag near-dups vs the band store, then
-    append this batch's bands — both written as
-    ``batch_k=<offset + k>`` partition overwrites (idempotent under
-    replay, collision-free across increments)."""
+    append this batch's bands."""
     from mongo2pq_spark.operators.dedup import (
         minhash_band_table,
         minhash_signatures,
     )
 
-    bands_dir = os.path.join(store_dir, "bands")
-    flags_dir = os.path.join(store_dir, "flags")
-
     def body(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        # batch key from the DATA: staging puts exactly one
-        # doc_id % n_batches class in each file/trigger
-        k = batch_df.select(
-            (F.col("doc_id") % n_batches).alias("k")
-        ).first()["k"]
-        seq = offset + k
+        seq = _batch_seq(batch_df, n_batches, offset)
         bands = minhash_band_table(
             minhash_signatures(batch_df), "doc_id"
         ).select("doc_id", "band_id", "band_hash")
@@ -146,96 +184,46 @@ def make_near_dedup_batch(store_dir: str, n_batches: int, offset: int = 0):
         # within-batch rule: collides with a LOWER id of the same batch
         a = bands.select("band_id", "band_hash", F.col("doc_id").alias("hi"))
         b = bands.select("band_id", "band_hash", F.col("doc_id").alias("lo"))
-        intra = (
+        dup_ids = (
             a.join(b, ["band_id", "band_hash"])
             .filter(F.col("lo") < F.col("hi"))
             .select(F.col("hi").alias("doc_id"))
             .distinct()
         )
         # cross-batch rule: collides with ANY band of sequence < seq
-        # (earlier batches of this increment AND every prior
-        # increment) — probed from the store's own partitions, so
-        # replay is exact. Explicit existence check, not try/except: a
-        # real read error must fail the batch (silently treating it as
-        # "empty store" would mass-unflag duplicates). At warehouse
-        # scale this becomes a catalog table-exists check / MERGE
-        # source.
-        has_store = bool(
-            data_partition_dirs(Path(bands_dir), prefix="batch_k=")
-        )
-        if has_store:
-            index = (
-                spark.read.option("basePath", bands_dir)
-                .parquet(bands_dir)
-                .filter(F.col("batch_k") < seq)
-                .select("band_id", "band_hash")
-                .distinct()
-            )
+        earlier = _earlier_bands(batch_df.sparkSession, store_dir, seq)
+        if earlier is not None:
+            index = earlier.select("band_id", "band_hash").distinct()
             inter = (
                 bands.join(index, ["band_id", "band_hash"], "left_semi")
                 .select("doc_id")
                 .distinct()
             )
-            dup_ids = intra.unionByName(inter).distinct()
-        else:
-            dup_ids = intra
-        flags = batch_df.select("doc_id").join(
-            dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left"
-        ).select(
-            "doc_id",
-            F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
-        )
-        flags.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"batch_k={seq}")
-        )
-        bands.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch_k={seq}")
-        )
+            dup_ids = dup_ids.unionByName(inter).distinct()
+        _flag_and_append(batch_df, store_dir, seq, dup_ids, bands)
 
     return body
 
 
 def _recover_band_store_swap(store_dir: str) -> None:
-    """Finish a compaction swap interrupted at any crash window — the
-    shared ``recover_replace`` protocol (write-aside build →
-    complete-by-naming swap-in → ``.old`` rollback). A crash between
-    the swap renames would otherwise leave NO bands directory, which
-    the batch probe would silently read as an empty store and
-    mass-unflag duplicates, so every entry point (compaction and
-    increment start) runs this first.
-
-    Pre-unification stores used the names ``bands_swapin``/
-    ``bands_old``; a store crashed mid-swap under THOSE names must not
-    become unrecoverable after an upgrade (silent mass-unflag), so
-    they are migrated to the shared names before recovery runs."""
-    from mongo2pq_spark.plans.bandstore_core import aux_path
-
-    bands = Path(store_dir) / "bands"
-    for legacy, kind in (("bands_swapin", "swapin"), ("bands_old", "old")):
-        legacy_dir = Path(store_dir) / legacy
-        target = aux_path(bands, kind)
-        if legacy_dir.is_dir() and not target.exists():
-            os.rename(legacy_dir, target)
-    recover_replace(bands)
+    """Finish a compaction swap interrupted at any crash window (the
+    shared ``recover_replace`` protocol). A crash between the swap
+    renames would otherwise leave NO bands directory, which the batch
+    probe would silently read as an empty store and mass-unflag
+    duplicates, so every entry point runs this first."""
+    recover_replace(Path(store_dir) / "bands")
 
 
-def compact_band_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the persisted band index so year-long ingestion doesn't
-    grow it without bound (~3 band rows/doc forever).
-
-    Future flags depend ONLY on whether some (band_id, band_hash)
-    exists with ``batch_k < seq`` — so keeping, per distinct
-    (band_id, band_hash), the single row with the MINIMAL batch_k
-    (min doc_id among ties, for determinism) preserves every future
-    probe's answer exactly while dropping all later re-occurrences of
-    a band (in a dup-heavy corpus, most of the store). The rewrite
-    stays partitioned by batch_k so subsequent increments keep
-    appending new partitions; it is one shuffle on the (band_id,
-    band_hash) key over the band store — never the corpus — and is
-    swapped in via the shared crash-safe ``replace_dir`` protocol
-    (recovery at every entry point via ``_recover_band_store_swap``).
-    At warehouse scale this is the MERGE/OPTIMIZE maintenance job run
-    between increments; only run it with no increment in flight."""
+def _compact_bands(
+    spark: SparkSession, store_dir: str, keys: tuple[str, ...]
+) -> None:
+    """Keep, per distinct ``keys`` tuple, the row with the minimal
+    (batch_k, doc_id), and swap the rewrite in through the shared
+    crash-safe ``replace_dir``. The rewrite stays partitioned by
+    batch_k so later increments keep appending partitions; it is one
+    shuffle over the band store, never the corpus. At warehouse scale
+    this is the MERGE/OPTIMIZE job run between increments; only run
+    it with no increment in flight."""
     _recover_band_store_swap(store_dir)
     bands_dir = os.path.join(store_dir, "bands")
     if not os.path.isdir(bands_dir):
@@ -243,14 +231,11 @@ def compact_band_store(spark: SparkSession, store_dir: str) -> None:
     compacted = (
         spark.read.option("basePath", bands_dir)
         .parquet(bands_dir)
-        .groupBy("band_id", "band_hash")
-        .agg(
-            F.min(F.struct("batch_k", "doc_id")).alias("first"),
-        )
+        .groupBy(*keys)
+        .agg(F.min(F.struct("batch_k", "doc_id")).alias("first"))
         .select(
             F.col("first.doc_id").alias("doc_id"),
-            "band_id",
-            "band_hash",
+            *keys,
             F.col("first.batch_k").alias("batch_k"),
         )
     )
@@ -260,6 +245,94 @@ def compact_band_store(spark: SparkSession, store_dir: str) -> None:
         .partitionBy("batch_k")
         .parquet(build),
     )
+
+
+def compact_band_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the persisted MinHash band index so year-long ingestion
+    doesn't grow it without bound (~3 band rows/doc forever). Future
+    flags depend ONLY on whether some (band_id, band_hash) exists with
+    ``batch_k < seq``, so keeping each band's first occurrence
+    preserves every future probe's answer exactly while dropping its
+    later re-occurrences (in a dup-heavy corpus, most of the store)."""
+    _compact_bands(spark, store_dir, ("band_id", "band_hash"))
+
+
+def _run_increment(
+    spark: SparkSession,
+    documents_path: str,
+    n_batches: int,
+    store_dir: str | None,
+    driver_collect_ok: bool,
+    make_body,
+    tmp_prefix: str,
+) -> DataFrame:
+    """The increment driver both streaming stores share: recover,
+    allocate (or resume) the run, stage, stream the staged batches
+    through ``make_body(store_dir, n_batches, offset)``, mark the run
+    done, drop stage and checkpoint, and return the flag table."""
+    cleanup = store_dir is None
+    if cleanup and not driver_collect_ok:
+        raise ValueError(
+            "store_dir=None collects the whole flag table driver-side "
+            "and deletes the store — a test/verification convenience. "
+            "Pass a persistent store_dir (production), or opt in "
+            "explicitly with driver_collect_ok=True on a corpus you "
+            "know is driver-bounded."
+        )
+    if store_dir is None:
+        store_dir = tempfile.mkdtemp(prefix=tmp_prefix)
+    _recover_band_store_swap(store_dir)
+    run_id, offset, n_batches = _begin_increment(
+        store_dir, n_batches, documents_path
+    )
+    stage_dir = os.path.join(store_dir, f"stage_{run_id}")
+    ckpt_dir = os.path.join(store_dir, f"ckpt_{run_id}")
+    try:
+        _stage_batches(spark, documents_path, stage_dir, n_batches)
+        static = spark.read.parquet(
+            os.path.join(stage_dir, "batch_0.parquet")
+        )
+        stream = (
+            spark.readStream.schema(static.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage_dir)
+        )
+        query = (
+            stream.writeStream.foreachBatch(
+                make_body(store_dir, n_batches, offset)
+            )
+            .option("checkpointLocation", ckpt_dir)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        RunLog(os.path.join(store_dir, "runs")).mark_done(run_id)
+        # the staged corpus copy and the checkpoint are only needed
+        # while the increment is un-done; dropping them here keeps a
+        # persistent store's footprint at bands+flags (the module
+        # contract: the store is the corpus's only trace) instead of
+        # accumulating a full duplicate of every increment's text
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        result = (
+            spark.read.option("basePath", os.path.join(store_dir, "flags"))
+            .parquet(os.path.join(store_dir, "flags"))
+            .select(
+                "doc_id",
+                F.col("batch_k").cast("bigint").alias("batch_k"),
+                "is_dup",
+            )
+        )
+        if cleanup:
+            rows = result.collect()
+            return spark.createDataFrame(rows, result.schema)
+        return result
+    finally:
+        if cleanup:
+            shutil.rmtree(store_dir, ignore_errors=True)
 
 
 def run_streaming_near_dedup(
@@ -292,70 +365,10 @@ def run_streaming_near_dedup(
     the driver, which is fine for a bounded test/verification corpus
     and catastrophic wired into a production pipeline by accident —
     the flag makes that wiring a loud error instead."""
-    cleanup = store_dir is None
-    if cleanup and not driver_collect_ok:
-        raise ValueError(
-            "store_dir=None collects the whole flag table driver-side "
-            "and deletes the store — a test/verification convenience. "
-            "Pass a persistent store_dir (production), or opt in "
-            "explicitly with driver_collect_ok=True on a corpus you "
-            "know is driver-bounded."
-        )
-    if store_dir is None:
-        store_dir = tempfile.mkdtemp(prefix="stream_neardedup_")
-    _recover_band_store_swap(store_dir)
-    run_id, offset, n_batches = _begin_increment(
-        store_dir, n_batches, documents_path
+    return _run_increment(
+        spark, documents_path, n_batches, store_dir, driver_collect_ok,
+        make_near_dedup_batch, "stream_neardedup_",
     )
-    stage_dir = os.path.join(store_dir, f"stage_{run_id}")
-    ckpt_dir = os.path.join(store_dir, f"ckpt_{run_id}")
-    runs_dir = os.path.join(store_dir, "runs")
-    try:
-        _stage_batches(spark, documents_path, stage_dir, n_batches)
-        static = spark.read.parquet(
-            os.path.join(stage_dir, "batch_0.parquet")
-        )
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(
-                make_near_dedup_batch(store_dir, n_batches, offset)
-            )
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        RunLog(runs_dir).mark_done(run_id)
-        # the staged corpus copy and the checkpoint are only needed
-        # while the increment is un-done; dropping them here keeps a
-        # persistent store's footprint at bands+flags (the module
-        # contract: the store is the corpus's only trace) instead of
-        # accumulating a full duplicate of every increment's text
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        result = (
-            spark.read.option("basePath", os.path.join(store_dir, "flags"))
-            .parquet(os.path.join(store_dir, "flags"))
-            .select(
-                "doc_id",
-                F.col("batch_k").cast("bigint").alias("batch_k"),
-                "is_dup",
-            )
-        )
-        if cleanup:
-            rows = result.collect()
-            return spark.createDataFrame(rows, result.schema)
-        return result
-    finally:
-        if cleanup:
-            shutil.rmtree(store_dir, ignore_errors=True)
 
 
 def make_hamming_dedup_batch(
@@ -387,17 +400,10 @@ def make_hamming_dedup_batch(
     SQL-expressible for the oracle."""
     from mongo2pq_spark.operators.dedup import _hamming_band_table
 
-    bands_dir = os.path.join(store_dir, "bands")
-    flags_dir = os.path.join(store_dir, "flags")
-
     def body(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        k = batch_df.select(
-            (F.col("doc_id") % n_batches).alias("k")
-        ).first()["k"]
-        seq = offset + k
+        seq = _batch_seq(batch_df, n_batches, offset)
         fp = fingerprint_fn(batch_df)
         extra = [c for c in fp.columns if c != "doc_id"]
         if len(extra) != 1:
@@ -423,25 +429,17 @@ def make_hamming_dedup_batch(
             "band_id", "band_value", F.col("doc_id").alias("lo"),
             F.col("fp").alias("other_fp"),
         )
-        intra = (
+        dup_ids = (
             a.join(b, ["band_id", "band_value"])
             .filter(F.col("lo") < F.col("hi"))
             .filter(ham <= max_hamming)
             .select(F.col("hi").alias("doc_id"))
             .distinct()
         )
-        has_store = bool(
-            data_partition_dirs(Path(bands_dir), prefix="batch_k=")
-        )
-        if has_store:
-            index = (
-                spark.read.option("basePath", bands_dir)
-                .parquet(bands_dir)
-                .filter(F.col("batch_k") < seq)
-                .select(
-                    "band_id", "band_value",
-                    F.col("fp").alias("other_fp"),
-                )
+        earlier = _earlier_bands(batch_df.sparkSession, store_dir, seq)
+        if earlier is not None:
+            index = earlier.select(
+                "band_id", "band_value", F.col("fp").alias("other_fp")
             )
             inter = (
                 banded.join(index, ["band_id", "band_value"])
@@ -449,21 +447,8 @@ def make_hamming_dedup_batch(
                 .select("doc_id")
                 .distinct()
             )
-            dup_ids = intra.unionByName(inter).distinct()
-        else:
-            dup_ids = intra
-        flags = batch_df.select("doc_id").join(
-            dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left"
-        ).select(
-            "doc_id",
-            F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
-        )
-        flags.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"batch_k={seq}")
-        )
-        banded.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch_k={seq}")
-        )
+            dup_ids = dup_ids.unionByName(inter).distinct()
+        _flag_and_append(batch_df, store_dir, seq, dup_ids, banded)
 
     return body
 
@@ -474,31 +459,8 @@ def compact_hamming_store(spark: SparkSession, store_dir: str) -> None:
     (band_id, band_value, fp) triple — keep each triple's minimal
     (batch_k, doc_id) row and every future flag is unchanged while
     re-occurrences of the same fingerprint's band (the bulk of a
-    dup-heavy stream) are dropped. Same crash-safe swap protocol as
-    the MinHash store."""
-    _recover_band_store_swap(store_dir)
-    bands_dir = os.path.join(store_dir, "bands")
-    if not os.path.isdir(bands_dir):
-        return
-    compacted = (
-        spark.read.option("basePath", bands_dir)
-        .parquet(bands_dir)
-        .groupBy("band_id", "band_value", "fp")
-        .agg(F.min(F.struct("batch_k", "doc_id")).alias("first"))
-        .select(
-            F.col("first.doc_id").alias("doc_id"),
-            "fp",
-            "band_id",
-            "band_value",
-            F.col("first.batch_k").alias("batch_k"),
-        )
-    )
-    replace_dir(
-        Path(bands_dir),
-        lambda build: compacted.write.mode("overwrite")
-        .partitionBy("batch_k")
-        .parquet(build),
-    )
+    dup-heavy stream) are dropped."""
+    _compact_bands(spark, store_dir, ("fp", "band_id", "band_value"))
 
 
 def run_streaming_hamming_dedup(
@@ -521,65 +483,10 @@ def run_streaming_hamming_dedup(
     (doc_id, <fp column>) — ``simhash_fingerprints`` for text,
     ``image_dhash``/``audio_fingerprint`` over payload tables for
     media; the store and probe are fingerprint-agnostic."""
-    cleanup = store_dir is None
-    if cleanup and not driver_collect_ok:
-        raise ValueError(
-            "store_dir=None collects the whole flag table driver-side "
-            "and deletes the store — a test/verification convenience. "
-            "Pass a persistent store_dir (production), or opt in "
-            "explicitly with driver_collect_ok=True on a corpus you "
-            "know is driver-bounded."
-        )
-    if store_dir is None:
-        store_dir = tempfile.mkdtemp(prefix="stream_hammingdedup_")
-    _recover_band_store_swap(store_dir)
-    run_id, offset, n_batches = _begin_increment(
-        store_dir, n_batches, documents_path
+    return _run_increment(
+        spark, documents_path, n_batches, store_dir, driver_collect_ok,
+        lambda d, n, off: make_hamming_dedup_batch(
+            d, n, off, fingerprint_fn, max_hamming, bits
+        ),
+        "stream_hammingdedup_",
     )
-    stage_dir = os.path.join(store_dir, f"stage_{run_id}")
-    ckpt_dir = os.path.join(store_dir, f"ckpt_{run_id}")
-    runs_dir = os.path.join(store_dir, "runs")
-    try:
-        _stage_batches(spark, documents_path, stage_dir, n_batches)
-        static = spark.read.parquet(
-            os.path.join(stage_dir, "batch_0.parquet")
-        )
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(
-                make_hamming_dedup_batch(
-                    store_dir, n_batches, offset, fingerprint_fn,
-                    max_hamming, bits,
-                )
-            )
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        RunLog(runs_dir).mark_done(run_id)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        result = (
-            spark.read.option("basePath", os.path.join(store_dir, "flags"))
-            .parquet(os.path.join(store_dir, "flags"))
-            .select(
-                "doc_id",
-                F.col("batch_k").cast("bigint").alias("batch_k"),
-                "is_dup",
-            )
-        )
-        if cleanup:
-            rows = result.collect()
-            return spark.createDataFrame(rows, result.schema)
-        return result
-    finally:
-        if cleanup:
-            shutil.rmtree(store_dir, ignore_errors=True)

@@ -850,46 +850,6 @@ def test_near_dedup_batch_token_is_layout_independent(spark, sf_dir, tmp_path):
     assert store.batch_token(changed) != base
 
 
-def test_consolidation_recovery_migrates_legacy_names(spark, sf_dir, tmp_path):
-    """A consolidation crashed mid-swap under the PRE-unification
-    naming (_swapin_c0, with batch=c0 already removed) must roll
-    forward at the next store open — the absorbed index entries are
-    the only copy."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from mongo2pq_spark.plans.neardedup_store import NearDedupStore
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    root = tmp_path / "store"
-
-    def ingest(batch):
-        store = NearDedupStore(root, "docs", text_col="text")
-        token = store.batch_token(batch)
-        out = store.filter_new(batch, token)
-        ids = {r.doc_id for r in out.select("doc_id").collect()}
-        store.commit(token)
-        return ids
-
-    ingest(docs.filter(F.col("doc_id") < 60))
-    ingest(docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 120)))
-    NearDedupStore(root, "docs", text_col="text").consolidate(spark)
-
-    sigs = root / "docs" / "sigs"
-    shutil.move(str(sigs / "batch=c0"), str(sigs / "_swapin_c0"))
-    NearDedupStore(root, "docs", text_col="text")  # open = recovery
-    assert (sigs / "batch=c0").is_dir()
-    assert not (sigs / "_swapin_c0").exists()
-    # the absorbed history still dedups: copies of batch-1 docs drop
-    copies = docs.filter(F.col("doc_id") < 30).withColumn(
-        "doc_id", F.col("doc_id") + 50_000
-    )
-    assert ingest(copies) == set()
-
-
 def test_cli_consolidate_covers_trees_not_indexed_this_run(spark, sf_dir, tmp_path):
     """--near-dedup-consolidate is store-wide maintenance: a tree
     whose collection is ABSENT from the triggering run must still

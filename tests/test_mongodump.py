@@ -67,6 +67,18 @@ def test_date_wrappers_deliver_microsecond_timestamps(spark, dump_path):
     assert rows["beta"]["ts"] == datetime(2024, 1, 5, 10, 20, 30, 123000)
 
 
+def test_read_ships_package_to_executors(spark, dump_path, monkeypatch):
+    """The reader unpickles inside Python workers, which only import
+    this package by accident (cwd == repo root) unless it is shipped:
+    ``read_mongodump`` must ship it for the session it reads with."""
+    from mongo2pq_spark import deploy
+
+    shipped = []
+    monkeypatch.setattr(deploy, "ensure_shipped", shipped.append)
+    read_mongodump(spark, dump_path)
+    assert shipped == [spark]
+
+
 def test_nested_fields_skipped_by_default(spark, dump_path):
     df = read_mongodump(spark, dump_path)
     assert "meta" not in df.columns

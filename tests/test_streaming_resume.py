@@ -327,33 +327,6 @@ def test_run_log_numeric_ordering_past_r9999(tmp_path):
     assert rid2 == "r10001" and off2 == off + 3
 
 
-def test_band_store_swap_recovery_migrates_legacy_names(tmp_path):
-    """A store crashed mid-swap under the PRE-unification scratch
-    names (bands_swapin / bands_old) must still recover after the
-    upgrade — otherwise the probe reads 'empty store' and mass-unflags
-    every duplicate."""
-    from mongo2pq_spark.streaming.neardedup import _recover_band_store_swap
-
-    store = tmp_path / "s"
-    bands = store / "bands"
-    # legacy crash window 1: only the old-named swap-in exists
-    (store / "bands_swapin").mkdir(parents=True)
-    (store / "bands_swapin" / "part").write_text("compacted")
-    _recover_band_store_swap(str(store))
-    assert (bands / "part").read_text() == "compacted"
-    assert not (store / "bands_swapin").exists()
-
-    # legacy crash window 2: bands missing, old-named backup present
-    import shutil
-
-    shutil.rmtree(bands)
-    (store / "bands_old").mkdir()
-    (store / "bands_old" / "part").write_text("original")
-    _recover_band_store_swap(str(store))
-    assert (bands / "part").read_text() == "original"
-    assert not (store / "bands_old").exists()
-
-
 def test_streaming_hamming_dedup_second_increment(spark, sf_dir, tmp_path):
     """The Hamming store's multi-increment contract, mirrored from the
     MinHash store: a second increment of exact text copies under fresh

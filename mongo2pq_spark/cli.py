@@ -571,11 +571,12 @@ def main(
                 threshold=near_dedup_threshold,
             )
             stores.append(store)
-            # the token aggregate, the signature build, and the EL
-            # write each materialize this lineage (source scan + the
-            # exact-dedup shuffles); cache it once — spill-to-disk
-            # beats three full recomputations, and the finally block
-            # below releases it
+            # the token aggregate, the EL write and the signature
+            # build (inside the write's probe, or at commit when the
+            # store is empty) each read this lineage: the source scan
+            # and the exact-dedup shuffle. The token aggregate fills
+            # the cache, so the other two re-read cached rows instead
+            # of re-running both; the finally block below releases it
             cached_df = df.persist()
             tokens.append(store.batch_token(cached_df))
             df = store.filter_new(cached_df, tokens[0])

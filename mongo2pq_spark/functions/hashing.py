@@ -51,10 +51,6 @@ def hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("bigint")
 
 
-def minhash_col(hash_col: Column, a: int, b: int) -> Column:
-    return (hash_col * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
 # -- DuckDB SQL fragments ----------------------------------------------------
 
 def sql_token_hash32(expr: str) -> str:

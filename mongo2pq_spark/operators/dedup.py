@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from mongo2pq_spark.functions.hashing import (
     hash64,
-    minhash_col,
     minhash_perms,
+    sql_minhash,
     token_hash32,
 )
 from mongo2pq_spark.functions.textfns import tokens, word_shingles
@@ -57,53 +57,47 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly ONE row per distinct text: the min-``id_col`` row
-    (ties on id broken by a whole-row digest, so the survivor is
-    deterministic even with non-unique ids).
+def _q(name: str) -> str:
+    """``name`` as a quoted identifier for SQL-text expressions."""
+    return "`" + name.replace("`", "``") + "`"
 
-    Survivor selection is two-phase: aggregate ``min(struct(id,
-    row_digest))`` per text digest — partial-aggregation-friendly, so a
-    boilerplate text duplicated millions of times combines map-side
-    instead of routing every copy into one straggler task (the skew
-    trap of the row_number-over-digest-partition formulation) — then a
-    multi-key semi-join picks the winning rows back out. A final
-    whole-row dropDuplicates collapses fully-identical copies of a
-    winning row (same id AND same bytes), whose join keys tie; its key
-    is the entire row, so it is skew-free too. Costs one extra shuffle
-    vs the window form; at corpus scale, skew resilience wins.
+
+def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Keep exactly ONE row per distinct text: the min-``id_col`` row,
+    NULL ids last (ties on id broken by a whole-row digest, so the
+    survivor is deterministic even with non-unique ids).
+
+    One shuffle: ``groupBy(text digest)`` with ``min_by(struct(<all
+    columns>), struct(<id> IS NULL, <id>, <row digest>))``. The
+    aggregate is partial-aggregation-friendly, so a boilerplate text
+    duplicated millions of times combines map-side instead of routing
+    every copy into one straggler task (the skew trap of the
+    row_number-over-digest-partition formulation), and the winning row
+    comes out of the aggregate itself — no join back, no second pass.
+    Fully identical copies of a winning row (same id AND same bytes)
+    tie on the whole key and are one row either way.
+
+    NULL ids: a row with an id beats every NULL-id row of its text (the
+    DuckDB oracle's ``ORDER BY doc_id``, NULLS LAST); a text whose rows
+    all have NULL ids keeps the one with the least row digest. A NULL
+    id never erases its text group.
 
     NULL-text rows pass through UNTOUCHED: a missing text is not a
     duplicate of anything (and the old digest-equality join silently
     dropped every such row — r12 fix; callers that want null texts
     gone should filter explicitly, not lose them to a dedup)."""
-    digest = F.md5(F.col(text_col).cast("binary"))
-    row_digest = F.md5(
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).cast("binary")
-    )
-    nulls = df.filter(F.col(text_col).isNull())
-    df = df.filter(F.col(text_col).isNotNull())
-    keyed = df.withColumn("__digest", digest).withColumn("__rd", row_digest)
-    winners = (
-        keyed.groupBy("__digest")
-        .agg(F.min(F.struct(F.col(id_col).alias("id"), F.col("__rd").alias("rd"))).alias("w"))
-        .select(
-            F.col("__digest").alias("__wdigest"),
-            F.col("w.id").alias("__wid"),
-            F.col("w.rd").alias("__wrd"),
-        )
+    text, idc = _q(text_col), _q(id_col)
+    row = "struct(" + ", ".join(_q(c) for c in df.columns) + ")"
+    key = (
+        f"struct({idc} IS NULL, {idc}, "
+        f"md5(cast(to_json({row}) AS BINARY)))"
     )
     return (
-        keyed.join(
-            winners,
-            (F.col("__digest") == F.col("__wdigest"))
-            & (F.col(id_col) == F.col("__wid"))
-            & (F.col("__rd") == F.col("__wrd")),
-            "left_semi",
-        )
-        .dropDuplicates(["__rd"])
-        .drop("__digest", "__rd")
-        .unionByName(nulls)
+        df.where(f"{text} IS NOT NULL")
+        .groupBy(F.expr(f"md5(cast({text} AS BINARY)) AS __digest"))
+        .agg(F.expr(f"min_by({row}, {key}) AS __w"))
+        .select("__w.*")
+        .unionByName(df.where(f"{text} IS NULL"))
     )
 
 
@@ -113,6 +107,40 @@ def _doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     return (
         df.select(F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle"))
         .select(F.col(id_col), token_hash32(F.col("shingle")).alias("h"))
+    )
+
+
+def _minhash_aggregates(k: int, seed: int) -> list[Column]:
+    """The k ``min`` aggregates of a signature pass over a shingle-hash
+    column ``h`` (columns mh0..mh{k-1}). Each is one SQL-text
+    expression on ``hashing.sql_minhash``, the fragment the DuckDB
+    oracles use, so both engines share one MinHash definition."""
+    return [
+        F.expr(f"min({sql_minhash('h', a, b)}) AS mh{i}")
+        for i, (a, b) in enumerate(minhash_perms(k, seed))
+    ]
+
+
+def _with_bands(sig: DataFrame, k: int, bands: int) -> DataFrame:
+    """``sig`` exploded to one row per LSH band: every signature column
+    plus ``band_id`` and ``band_hash``, the md5 of the band's ``k //
+    bands`` components joined by commas."""
+    rows = k // bands
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_hash', md5(cast(concat_ws(',', "
+        + ", ".join(f"mh{b * rows + r}" for r in range(rows))
+        + ") AS BINARY)))"
+        for b in range(bands)
+    )
+    return sig.selectExpr("*", f"inline(array({structs}))")
+
+
+def minhash_agreement_sql(k: int, left: str, right: str) -> str:
+    """SQL text of the count of agreeing components between the
+    signatures ``<left>mh0..`` and ``<right>mh0..`` (INT)."""
+    return " + ".join(
+        f"CASE WHEN {left}mh{i} = {right}mh{i} THEN 1 ELSE 0 END"
+        for i in range(k)
     )
 
 
@@ -127,12 +155,7 @@ def minhash_signatures(
     """doc → k-wide MinHash signature, computed in a single groupBy
     pass (columns mh0..mh{k-1})."""
     hashes = _doc_shingle_hashes(df, id_col, text_col, shingle_n)
-    perms = minhash_perms(k, seed)
-    aggs = [
-        F.min(minhash_col(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
-    return hashes.groupBy(id_col).agg(*aggs)
+    return hashes.groupBy(id_col).agg(*_minhash_aggregates(k, seed))
 
 
 def minhash_band_table(
@@ -143,23 +166,7 @@ def minhash_band_table(
     the PERSISTABLE index form: at scale the corpus band table is
     written once and every future increment probes it by equi-join
     without re-shingling history (see incremental_near_dup_candidates)."""
-    rows = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("band")).select(
-        id_col, "band.band_id", "band.band_hash"
-    )
+    return _with_bands(sig, k, bands).select(id_col, "band_id", "band_hash")
 
 
 def band_candidate_pairs(
@@ -242,31 +249,10 @@ def minhash_jaccard_estimates(
     """
     if k % bands:
         raise ValueError("k must be divisible by bands")
-    rows = k // bands
-    sig = minhash_signatures(df, id_col, text_col, k, shingle_n, seed)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    banded = _with_bands(
+        minhash_signatures(df, id_col, text_col, k, shingle_n, seed), k, bands
     )
-    banded = sig.select(
-        F.col(id_col), F.explode(band_structs).alias("band"), *[
-            F.col(f"mh{i}") for i in range(k)
-        ]
-    ).select(id_col, "band.band_id", "band.band_hash", *[f"mh{i}" for i in range(k)])
     a, b = banded.alias("a"), banded.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
-        for i in range(k)
-    )
     return (
         a.join(
             b,
@@ -277,7 +263,7 @@ def minhash_jaccard_estimates(
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
             F.col(f"b.{id_col}").alias("doc_b"),
-            agree.alias("agree"),
+            F.expr(f"{minhash_agreement_sql(k, 'a.', 'b.')} AS agree"),
         )
         # a pair colliding in several bands appears once per band with
         # the same agreement count — collapse, then scale to [0, 1]
@@ -318,43 +304,16 @@ def minhash_containment_estimates(
     """
     if k % bands:
         raise ValueError("k must be divisible by bands")
-    rows = k // bands
     hashes = _doc_shingle_hashes(df, id_col, text_col, shingle_n)
-    perms = minhash_perms(k, seed)
-    aggs = [
-        F.min(minhash_col(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
     # signature + exact set size in ONE aggregation; cached because the
     # banded self-join reads it twice
     sig = _cache_stream(
-        hashes.groupBy(id_col).agg(*aggs, F.count("*").alias("sz"))
+        hashes.groupBy(id_col).agg(
+            *_minhash_aggregates(k, seed), F.count("*").alias("sz")
+        )
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.explode(band_structs).alias("band"),
-        *[F.col(f"mh{i}") for i in range(k)], F.col("sz"),
-    ).select(
-        id_col, "band.band_id", "band.band_hash",
-        *[f"mh{i}" for i in range(k)], "sz",
-    )
+    banded = _with_bands(sig, k, bands)
     a, b = banded.alias("a"), banded.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
-        for i in range(k)
-    )
     paired = (
         a.join(
             b,
@@ -365,7 +324,7 @@ def minhash_containment_estimates(
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
             F.col(f"b.{id_col}").alias("doc_b"),
-            agree.alias("agree"),
+            F.expr(f"{minhash_agreement_sql(k, 'a.', 'b.')} AS agree"),
             F.col("a.sz").alias("sz_a"),
             F.col("b.sz").alias("sz_b"),
         )
@@ -1067,9 +1026,9 @@ def chunk_dedup_reassemble(
 
     Scale shape: tokenize+chunk is one narrow pass (materialized token
     array projected BEFORE the posexplode — the `chunk_documents`
-    anti-inlining pattern). Survivor selection is the TWO-PHASE
-    min-struct of ``drop_exact_duplicates``, not a window over the
-    chunk key: ``groupBy(key).agg(min(struct(doc, chunk)))`` combines
+    anti-inlining pattern). Survivor selection is a TWO-PHASE
+    min-struct, not a window over the chunk key:
+    ``groupBy(key).agg(min(struct(doc, chunk)))`` combines
     map-side, so a boilerplate chunk duplicated millions of times
     never routes every copy into one straggler task (the
     window-over-key formulation cannot partial-aggregate and AQE
@@ -1077,8 +1036,7 @@ def chunk_dedup_reassemble(
     that picks winners back out). The rebuild is one shuffle back on
     the doc id (collect_list of (chunk_id, text) sorted in-group —
     per-group memory is one document). Costs one extra exchange vs
-    the window form; at corpus scale, skew resilience wins — the same
-    trade `drop_exact_duplicates` documents."""
+    the window form; at corpus scale, skew resilience wins."""
     base = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("__toks")
     ).select(id_col, "__toks", F.size("__toks").alias("__n"))

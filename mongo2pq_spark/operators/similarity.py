@@ -22,8 +22,9 @@ n-gram dedup). Recall at a given cosine threshold is tuned by
 (H, L): wider buckets (small H) and more tables (large L) raise
 recall; the cap bounds the cost of wide buckets.
 
-All math is built-in higher-order functions (JVM codegen); no Python
-UDFs.
+Math is built-in higher-order functions (JVM codegen) except the LSH
+sign-bucket assignment, which is one Arrow/NumPy ``mapInArrow`` pass
+(``_assign_buckets_arrow`` says why); no row-at-a-time Python UDFs.
 """
 
 from __future__ import annotations
@@ -237,11 +238,11 @@ def _assign_buckets_arrow(
     IEEE add order per element), proven by exact-set equality against
     the HOF formulation in tests and by the unchanged DuckDB oracle.
 
-    Why Python here at all (the module header says "no Python UDFs in
-    the hot path"): the assignment is the ONE map-shaped stage whose
-    per-row work is L·H·dim floating multiplies — interpreted
-    lambda-eval in the JVM HOF chain, vectorized NumPy per Arrow
-    batch here (guide §4.2). Measured r19: 16×5 planes over 64 dims,
+    Why Python here at all (everything else in the module is JVM
+    higher-order functions): the assignment is the ONE map-shaped
+    stage whose per-row work is L·H·dim floating multiplies —
+    interpreted lambda-eval in the JVM HOF chain, vectorized NumPy per
+    Arrow batch here (guide §4.2). Measured r19: 16×5 planes over 64 dims,
     0.68 s (HOF, warm) → 0.24 s (Arrow) for the assignment pass at
     sf0.1. Only ``id_col`` and ``vec_col`` cross the boundary; the
     candidate join / verify stages stay pure JVM.
@@ -396,10 +397,14 @@ def _cap_buckets(
     falls back to an unhinted join and lets AQE pick the strategy at
     runtime — unconditionally safe.
 
-    Self-contained: the assignment stream is cached HERE (idempotent
-    via ``cache_stream``'s sameSemantics memo when the caller already
-    cached it), so the guard job can never trigger a second full L×n
-    hyperplane projection for an uncached caller."""
+    Self-contained: the assignment stream is cached HERE, so the guard
+    job can never trigger a second full L×n hyperplane projection for
+    an uncached caller. The cache is never shared with an earlier one:
+    the stream carries a ``mapInArrow`` stage, and a plan with a Python
+    stage never matches in ``cache_stream``'s sameSemantics memo (each
+    build wraps a fresh Python function; OPTIMIZATION_r19.md), so a
+    pre-cached stream or a repeated call registers a fresh cache of
+    the same rows."""
     assignments = cache_stream(assignments)
     oversized = (
         assignments.groupBy("table_id", "bucket")

@@ -315,8 +315,9 @@ def write_parquet(df, path: Path | str) -> None:
 
 class BatchStore:
     """The lifecycle of one batch-keyed store directory (see the module
-    docstring). A store supplies its pin, its tree names and
-    ``regroup``; everything else is here.
+    docstring). A store supplies its pin, its tree names, ``regroup``
+    and, when the pin fixes a tree's columns, ``tree_schema``;
+    everything else is here.
 
     Class attributes:
 
@@ -473,6 +474,22 @@ class BatchStore:
             )
         ]
 
+    def tree_schema(self, name: str) -> str | None:
+        """DDL schema of tree ``name`` when the pin fixes it, else
+        None. A known schema spares every read of the tree Spark's
+        parquet schema-inference job."""
+        return None
+
+    def read_tree(self, spark, name: str, paths):
+        """Read partition directories ``paths`` of tree ``name``, with
+        the ``batch`` partition column and its ``tree_schema`` when it
+        has one."""
+        reader = spark.read.option("basePath", str(self.tree(name)))
+        schema = self.tree_schema(name)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[str(p) for p in paths])
+
     def absorbed(self, token: str) -> bool:
         """Whether a fold already absorbed ``token`` in ANY tree: a
         crash between two tree swaps must not let a retry re-write
@@ -524,12 +541,7 @@ class BatchStore:
             }
             if not folded_tokens:
                 continue
-            folded = self.regroup(
-                name,
-                spark.read.option("basePath", str(tree)).parquet(
-                    *[str(p) for p in src]
-                ),
-            )
+            folded = self.regroup(name, self.read_tree(spark, name, src))
             if self.ROW_PROVENANCE:
                 replace_dir(
                     tree / c0, lambda build: write_parquet(folded, build)

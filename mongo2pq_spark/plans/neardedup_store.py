@@ -38,8 +38,16 @@ them (a listing cost, not a data cost).
 Scale shape: probe = one equi-join of the increment's bands against
 the stored band partitions; verify = one join of candidate pairs
 against two signature tables + a k-term agreement expression (no
-text, no UDF); the only cached artifacts are the increment's
-signatures and the dropped-id set (≪ increment size).
+text, no UDF, no distinct pass: both consumers of the drop set are
+anti-joins); the only cached artifacts are the increment's
+signatures and the dropped-id set (≪ increment size). At increment
+sizes Spark jobs and driver round trips, not rows, are the cost, so:
+every read of a tree carries the schema the pinned ``k`` fixes
+(``tree_schema``), which lets ``filter_new`` build its plan without
+launching a job and spares a fold the parquet schema-inference job;
+and the k-wide expressions (signature aggregates, band structs,
+rename, agreement) are SQL text, one py4j call each instead of a
+Column tree per term.
 """
 
 from __future__ import annotations
@@ -52,6 +60,7 @@ from pyspark.sql import functions as F
 from mongo2pq_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
+    minhash_agreement_sql,
     minhash_band_table,
     minhash_signatures,
 )
@@ -155,39 +164,39 @@ class NearDedupStore(BatchStore):
         # correctness backbone once batches are CONSOLIDATED into one
         # partition; the path-level exclusion above remains as a pure
         # read-avoidance optimization for unconsolidated batches
+        not_own = F.col("src_token") != token
         index_bands = (
-            spark.read.parquet(*band_dirs)
-            .filter(F.col("src_token") != token)
-            .select(F.col(STORE_ID).alias("existing_id"), "band_id", "band_hash")
+            self.read_tree(spark, "bands", band_dirs)
+            .filter(not_own)
+            .selectExpr(f"{STORE_ID} AS existing_id", "band_id", "band_hash")
         )
         new_bands = minhash_band_table(sig, STORE_ID, self.k, self.bands)
         # NOTE: no self-match guard on the ids — the probe already
         # excludes this batch's own partitions, so an equal digest
         # across batches IS a genuine duplicate (the same text
-        # re-ingested) and must be dropped, not skipped
-        cand = (
-            new_bands.join(index_bands, ["band_id", "band_hash"])
-            .select(STORE_ID, "existing_id")
-            .distinct()
+        # re-ingested) and must be dropped, not skipped. No distinct
+        # either: a pair colliding in several bands is verified once
+        # per band, and both consumers of the drop set are anti-joins
+        cand = new_bands.join(index_bands, ["band_id", "band_hash"]).select(
+            STORE_ID, "existing_id"
         )
         sig_dirs = self.other_batches("sigs", token)
-        index_sigs = spark.read.parquet(*sig_dirs).filter(
-            F.col("src_token") != token
+        index_sigs = (
+            self.read_tree(spark, "sigs", sig_dirs)
+            .filter(not_own)
+            .selectExpr(
+                f"{STORE_ID} AS existing_id",
+                *[f"mh{i} AS emh{i}" for i in range(self.k)],
+            )
         )
-        renamed = index_sigs.select(
-            F.col(STORE_ID).alias("existing_id"),
-            *[F.col(f"mh{i}").alias(f"emh{i}") for i in range(self.k)],
+        agreement = F.expr(minhash_agreement_sql(self.k, "", "e")) / float(
+            self.k
         )
-        agreement = sum(
-            F.when(F.col(f"mh{i}") == F.col(f"emh{i}"), 1).otherwise(0)
-            for i in range(self.k)
-        ) / float(self.k)
         dropped = (
             cand.join(sig, STORE_ID)
-            .join(renamed, "existing_id")
+            .join(index_sigs, "existing_id")
             .filter(agreement >= self.threshold)
             .select(STORE_ID)
-            .distinct()
             .persist()
         )
         self._dropped = dropped
@@ -226,11 +235,18 @@ class NearDedupStore(BatchStore):
         if name == "sigs":
             return df.groupBy(STORE_ID).agg(
                 F.min("src_token").alias("src_token"),
-                *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(self.k)],
+                *[F.expr(f"min(mh{i}) AS mh{i}") for i in range(self.k)],
             )
         return df.groupBy(STORE_ID, "band_id", "band_hash").agg(
             F.min("src_token").alias("src_token")
         )
+
+    def tree_schema(self, name: str) -> str:
+        """Both trees' columns follow from the pinned ``k``."""
+        if name == "sigs":
+            mh = ", ".join(f"mh{i} BIGINT" for i in range(self.k))
+            return f"{STORE_ID} STRING, {mh}, src_token STRING"
+        return f"{STORE_ID} STRING, band_id INT, band_hash STRING, src_token STRING"
 
     def close(self) -> None:
         """Release the cached increment artifacts."""

@@ -104,6 +104,20 @@ def test_drop_exact_duplicates_keeps_min_id(spark):
     assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 4]
 
 
+def test_drop_exact_duplicates_null_id_sorts_last(spark):
+    """A NULL id loses to any id of its text and never erases the text:
+    the survivors are the DuckDB oracle's ``ORDER BY doc_id`` (NULLS
+    LAST) ones."""
+    df = spark.createDataFrame(
+        [(None, "a"), (2, "a"), (None, "c"), (3, "b"), (None, "d"), (None, "d")],
+        "doc_id long, text string",
+    )
+    kept = drop_exact_duplicates(df).collect()
+    assert sorted((r.text, r.doc_id) for r in kept) == [
+        ("a", 2), ("b", 3), ("c", None), ("d", None)
+    ]
+
+
 def test_simhash_banding_is_lossless(spark, sf_dir):
     """Pigeonhole blocking must find every Hamming≤3 pair the brute
     force finds."""
